@@ -184,21 +184,6 @@ def _banded_rep_pairs(
     )
 
 
-def _partner_min(rep_pairs: DataFrame) -> DataFrame:
-    """(gk, pm): per grouping key, the smallest rep id among all groups it
-    matched — enough to decide cross-group losership without ever
-    materializing member-level pairs (a member m of g loses to partner h
-    iff m.id > min(h) = rep(h))."""
-    return (
-        rep_pairs.select(F.col("gk_a").alias("gk"), F.col("rep_b").alias("pm"))
-        .unionByName(
-            rep_pairs.select(F.col("gk_b").alias("gk"), F.col("rep_a").alias("pm"))
-        )
-        .groupBy("gk")
-        .agg(F.min("pm").alias("pm"))
-    )
-
-
 def _sig_digest(sig_col) -> "F.Column":
     """Engine-stable digest of a full minhash signature (grouping key for
     identical-signature collapse)."""

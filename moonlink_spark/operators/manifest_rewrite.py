@@ -59,7 +59,7 @@ def rewrite_manifests(
         ddf = read_delete_positions(spark, delete_entries)
         live_df = spark.createDataFrame([(p,) for p in live_paths], "file_path string")
         # no dropDuplicates needed: the DV repack (write_delete_files →
-        # pack_positions) groups ALL positions per data file and np.uniques
+        # pack_positions) sets each position's bit once per data file
         swept = ddf.join(F.broadcast(live_df), "file_path", "left_semi")
         max_seq = max(e.sequence_number for e in delete_entries)
         new_delete_entries = write_delete_files(

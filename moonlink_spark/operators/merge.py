@@ -104,7 +104,6 @@ def merge_cdc_batch(
     cdc_df: DataFrame,
     lsn: int,
     key: str | list[str] | None = None,
-    dedup_salt_buckets: int = 16,  # retained for API compat (skew is handled structurally; see salting.latest_wins_dedup)
     avg_row_bytes: int | None = None,  # None: estimated from manifest stats
     checkpoint_root: str | None = None,
     mode: str | None = None,

@@ -649,6 +649,17 @@ def _load_published(location: str) -> tuple[dict, list[dict], list[dict]]:
     return md, data, deletes
 
 
+def _current_schema(md: dict) -> dict:
+    """The schema ``current-schema-id`` names. Schemas are selected by their
+    ``schema-id``, never by list position: an evolved table's list need not
+    be ordered or dense."""
+    sid = md["current-schema-id"]
+    for s in md["schemas"]:
+        if s["schema-id"] == sid:
+            return s
+    raise ValueError(f"metadata has no schema with schema-id {sid}")
+
+
 def _spark_type(t):
     """Iceberg schema-JSON type → Spark type (the reader's direction)."""
     from pyspark.sql.types import StructField
@@ -694,7 +705,7 @@ def read_published(spark: SparkSession, location: str) -> DataFrame:
     from pyspark.sql.types import StructField
 
     md, data_entries, delete_entries = _load_published(location)
-    fields = md["schemas"][md["current-schema-id"]]["fields"]
+    fields = _current_schema(md)["fields"]
     cols = [f["name"] for f in fields]
     if not data_entries:
         raise ValueError("published table has no data files")
@@ -795,7 +806,7 @@ def import_iceberg(
     from moonlink_spark.table.writer import write_data_files
 
     md, data_entries, delete_entries = _load_published(src_location)
-    fields = md["schemas"][md["current-schema-id"]]["fields"]
+    fields = _current_schema(md)["fields"]
     from pyspark.sql.types import StructField
 
     schema = StructType(

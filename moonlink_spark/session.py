@@ -72,6 +72,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # every engine read names its files from the manifest, so listing is
+        # only a per-path existence/size check. Above the default threshold
+        # (32 paths) Spark runs that check as a Spark job with one task per
+        # path; on the driver it is a plain stat. Reading N named files,
+        # local FS, local[4] (default threshold vs. driver-side):
+        # N=50 0.53 s vs 0.08 s; N=500 2.10 s vs 0.15 s; N=4,000 12.9 s vs
+        # 0.73 s. Object stores pay one HEAD per path on the driver instead;
+        # deployments with very wide reads can lower it through extra_conf.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
     )
     if profile == "image":
         # binary-payload tables: a 4096-row columnar batch of ~20 KiB images

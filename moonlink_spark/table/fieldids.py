@@ -120,11 +120,6 @@ def footer_field_id_map(arrow_schema) -> dict[str, int] | None:
     return out
 
 
-def footer_has_field_ids(arrow_schema) -> bool:
-    """True when every top-level column carries a PARQUET:field_id."""
-    return footer_field_id_map(arrow_schema) is not None
-
-
 def schema_field_id_map(schema: StructType) -> dict[str, int] | None:
     """name -> field id for a table schema, or None when the schema carries
     no (complete) ids. This is the AGREEMENT reference for footer ids: a

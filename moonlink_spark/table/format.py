@@ -323,12 +323,5 @@ def read_snapshot(path: str) -> Snapshot:
     return Snapshot.from_dict(d)
 
 
-def snapshot_entries(md: TableMetadata, snapshot: Snapshot) -> list[FileEntry]:
-    out: list[FileEntry] = []
-    for m in snapshot.manifests:
-        out.extend(read_manifest(m))
-    return out
-
-
 def now_ms() -> int:
     return int(time.time() * 1000)

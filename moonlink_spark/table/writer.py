@@ -204,9 +204,7 @@ def write_delete_files(
     used to be a whole extra Spark job on the MERGE hot path."""
     from moonlink_spark.table.dv import DV2C, DV_FORMAT_STAT, pack_positions
 
-    packed = pack_positions(deletes_df)
-    if num_files:
-        packed = packed.repartition(num_files)
+    packed = pack_positions(deletes_df, num_files or None)
     packed.sortWithinPartitions("file_path").write.mode("append").parquet(out_dir)
     entries = collect_file_entries(spark, list_parquet(out_dir), content=DELETES)
     from moonlink_spark.table.stats import _open_footer

@@ -464,3 +464,36 @@ def test_import_iceberg_roundtrip(spark, tmp_path):
     # and the imported table is a full engine citizen: MERGE works on it
     merge_cdc_batch(spark, imp2, _cdc(spark, 80, 0, 0, 10, 20, "z"), lsn=2)
     assert scan(spark, imp2.refresh()).count() == 70
+
+
+def test_current_schema_selected_by_schema_id(spark, tmp_path):
+    """An evolved external table lists several schemas, and
+    ``current-schema-id`` is an id, not a list position: the reader and the
+    importer must resolve the schema whose ``schema-id`` matches."""
+    from moonlink_spark.operators.publish import import_iceberg
+
+    t, res = _mk_published(spark, tmp_path)
+    meta_dir = os.path.join(res.location, "metadata")
+    with open(os.path.join(meta_dir, "version-hint.text")) as f:
+        md_path = os.path.join(meta_dir, f"v{int(f.read().strip())}.metadata.json")
+    with open(md_path) as f:
+        md = json.load(f)
+    (current,) = md["schemas"]
+    current["schema-id"] = 7
+    decoy = {
+        "type": "struct",
+        "schema-id": 0,
+        "fields": [{"id": 1, "name": "decoy", "required": False, "type": "long"}],
+    }
+    md["schemas"] = [decoy, current]
+    md["current-schema-id"] = 7
+    with open(md_path, "w") as f:
+        json.dump(md, f)
+
+    want = scan(spark, t).select(*COLS).orderBy("image_id").collect()
+    got = read_published(spark, res.location)
+    assert "decoy" not in got.columns
+    assert got.select(*COLS).orderBy("image_id").collect() == want
+    imp = import_iceberg(spark, res.location, str(tmp_path / "imp"))
+    assert [f.name for f in imp.schema.fields] == [f["name"] for f in current["fields"]]
+    assert scan(spark, imp).select(*COLS).orderBy("image_id").collect() == want

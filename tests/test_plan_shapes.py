@@ -2,7 +2,9 @@
 visible in the executed plan, so assert them — column pruning reaches the
 parquet scan (ReadSchema), range predicates land as PushedFilters (row-group
 pruning inside surviving files), scans stay inside WholeStageCodegen, and
-the MERGE probe broadcasts the CDC key side instead of shuffling the table."""
+the MERGE probe broadcasts the CDC key side instead of shuffling the table.
+Reads and DV writes run no Python worker, building a read launches no Spark
+job, and a micro-MERGE's job count is pinned."""
 
 import contextlib
 import io
@@ -10,12 +12,17 @@ import os
 
 from pyspark.sql import functions as F
 
-from moonlink_spark.cdc import CdcScheduleGenerator, to_spark
+from moonlink_spark.cdc import CdcScheduleGenerator, spec_to_spark, to_spark
+from moonlink_spark.datagen import generate_images
 from moonlink_spark.operators.merge import merge_cdc_batch
 from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.catalog import create_table
-from moonlink_spark.table.scan import scan, scan_range
-from moonlink_spark.table.writer import BUCKETS_PROP
+from moonlink_spark.table.scan import scan, scan_range, scan_values
+from moonlink_spark.table.writer import (
+    BUCKETS_PROP,
+    write_bucketed_data_files,
+    write_delete_files,
+)
 
 
 def _plan(df, mode="formatted") -> str:
@@ -102,3 +109,135 @@ def test_changelog_reads_only_touched_files(spark, tmp_path):
     # none of the pre-existing files appear in the read plan
     hit = [p for p in pre_files if os.path.basename(p) in plan]
     assert hit == [], hit
+
+
+# ------------------------------------------- Python-free DV path, job counts
+
+_PYTHON_NODES = (
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+)
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Run ``action`` and return the final physical plan of every SQL
+    execution it ran, as the session's SQL status store recorded them."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {execs.apply(i).executionId(): execs.apply(i) for i in range(execs.size())}
+
+    before = ids().keys()
+    action()
+    return [
+        e.physicalPlanDescription() for i, e in ids().items() if i not in before
+    ]
+
+
+def _assert_no_python(plans: list[str]) -> None:
+    assert plans
+    for plan in plans:
+        hit = [n for n in _PYTHON_NODES if n in plan]
+        assert not hit, plan
+
+
+def _with_dvs(spark, tmp_path):
+    t, gen = _mk(spark, tmp_path)
+    merge_cdc_batch(spark, t, to_spark(spark, gen.next_batch(0, 30, 20)), gen.commit_lsn)
+    t.refresh()
+    assert t.delete_entries()
+    return t
+
+
+def test_dv_scan_runs_no_python(spark, tmp_path):
+    """A scan over deletion vectors expands them in the JVM: the anti-join
+    is there, and no Python exec node is in any executed plan."""
+    t = _with_dvs(spark, tmp_path)
+    df = scan(spark, t)
+    plans = _executed_plans(spark, df.collect)
+    assert any("LeftAnti" in p for p in plans), plans
+    _assert_no_python(plans)
+
+
+def test_dv_write_runs_no_python(spark, tmp_path):
+    """Packing (file_path, pos) rows into v2c bitmaps runs in the JVM."""
+    t = _with_dvs(spark, tmp_path)
+    dels = scan(spark, t, with_pos=True).limit(40).select(
+        F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+    )
+    out = str(tmp_path / "dv_out")
+    plans = _executed_plans(spark, lambda: write_delete_files(spark, dels, out))
+    assert any("HashAggregate" in p for p in plans)
+    _assert_no_python(plans)
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _wide(spark, tmp_path, n=800):
+    """A 16-bucket table of ``n`` images in files of at most 16 rows, key
+    blooms attached — the compacted layout, past Spark's default
+    32-path listing threshold."""
+    t = create_table(
+        str(tmp_path / "wide"), IMAGES_SCHEMA, properties={BUCKETS_PROP: "16"}
+    )
+    entries = write_bucketed_data_files(
+        spark,
+        generate_images(spark, n, partitions=4),
+        t.new_data_dir(),
+        "image_id",
+        16,
+        max_records_per_file=16,
+        field_id_schema=t.schema,
+    )
+    t.commit("append", added=entries, lsn=1)
+    gen = CdcScheduleGenerator(seed=5)
+    gen.live = {i: 0 for i in range(n)}
+    gen.next_new, gen.next_lsn = n, 2
+    return t, gen
+
+
+def _micro_merge(spark, t, gen) -> int:
+    """One eager 128-row MERGE (64 updates, 32 inserts, 32 deletes); its
+    Spark job count."""
+    df = spec_to_spark(spark, gen.next_spec(32, 64, 32), partitions=4).cache()
+    df.count()
+    j0 = _jobs(spark)
+    merge_cdc_batch(spark, t, df, gen.commit_lsn)
+    n = _jobs(spark) - j0
+    df.unpersist()
+    return n
+
+
+def test_building_reads_launches_no_jobs(spark, tmp_path):
+    """Building scan()/scan_values() over many manifest-named files (with
+    deletion vectors live) runs no Spark job: no listing job, no schema
+    inference — the plan is assembled on the driver."""
+    t, gen = _wide(spark, tmp_path)
+    _micro_merge(spark, t, gen)
+    t.refresh()
+    assert len(t.data_entries()) >= 40 and t.delete_entries()
+    j0 = _jobs(spark)
+    scan(spark, t)
+    scan(spark, t, columns=["image_id"], with_pos=True)
+    scan_values(spark, t, "image_id", [f"img{i:012d}" for i in range(0, 800, 100)])
+    assert _jobs(spark) == j0
+
+
+# measured: 4 for the stats/bloom collect, 2 for the insert write, 4 for the
+# probe and the DV pack/write; lower it as jobs go
+_MICRO_MERGE_JOBS = 10
+
+
+def test_micro_merge_job_count(spark, tmp_path):
+    """A 128-row eager MERGE on a 16-bucket table stays within its pinned
+    Spark job budget (probe, DV pack and write, insert write, stats)."""
+    t, gen = _wide(spark, tmp_path)
+    _micro_merge(spark, t, gen)  # first MERGE also creates the delete dir
+    assert _micro_merge(spark, t, gen) <= _MICRO_MERGE_JOBS
