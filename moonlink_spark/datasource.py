@@ -414,27 +414,6 @@ def _cdc_schema(schema: StructType) -> StructType:
     )
 
 
-def _prune_open(entries, col: str, lo, hi):
-    """prune_entries with open-ended bounds and cross-type safety: a stat
-    incomparable with the filter value (e.g. ISO-string date bounds vs a
-    datetime.date filter) keeps the file — conservative, never wrong."""
-    out = []
-    for e in entries:
-        st = e.stats.get(col)
-        if not st or st.get("min") is None or st.get("max") is None:
-            out.append(e)
-            continue
-        try:
-            if lo is not None and st["max"] < lo:
-                continue
-            if hi is not None and st["min"] > hi:
-                continue
-        except TypeError:
-            pass
-        out.append(e)
-    return out
-
-
 def _group(members: list) -> "MoonlinkPartition":
     """Wrap per-file 'data' partitions into one 'data-group' input split."""
     head = members[0]
@@ -525,10 +504,13 @@ class MoonlinkBatchReader(DataSourceReader):
         return filters
 
     def partitions(self):
+        from moonlink_spark.table.planning import keep_entries
+
         schema_json, name_to_id, identity, dv, eqs, project = self._meta
-        entries = self._entries
-        for col, (lo, hi) in self._bounds.items():
-            entries = _prune_open(entries, col, lo, hi)
+        # the driver executor: DataSource partitioning launches no Spark job
+        entries = keep_entries(
+            self._entries, {c: [tuple(b)] for c, b in self._bounds.items()}
+        )
         per_file = [
             (
                 e.file_size_bytes,

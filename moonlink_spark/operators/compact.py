@@ -484,28 +484,17 @@ def compact(
     # as a DataFrame, so the driver holds O(candidates), never O(table) and
     # never O(files-with-deletes)); JSON-manifest tables select driver-side
     # from the dict form, same policy
-    from moonlink_spark.table.planning import plan_compaction_candidates, plannable
+    from moonlink_spark.table.planning import (
+        plan_compaction_candidates,
+        plan_data_candidates,
+        plannable,
+    )
 
     if scoped:
-        from moonlink_spark.schema import normalize_keys
-        from moonlink_spark.table.planning import plan_data_candidates
-        from moonlink_spark.table.scan import prune_entries
-
-        if scope_key is not None:
-            keys = normalize_keys(scope_key)
-            los = list(scope_lo) if isinstance(scope_lo, (list, tuple)) else [scope_lo]
-            his = list(scope_hi) if isinstance(scope_hi, (list, tuple)) else [scope_hi]
-            planned = plan_data_candidates(spark, table, keys, los, his)
-            if planned is not None:
-                pool = planned[0]
-            else:
-                pool = table.data_entries()
-                for k, lo, hi in zip(keys, los, his):
-                    pool = prune_entries(pool, k, lo, hi)
-        else:
-            pool = table.data_entries()
-        if scope_buckets is not None:
-            pool = [e for e in pool if e.bucket in scope_buckets or e.bucket is None]
+        pool, _ = plan_data_candidates(
+            spark, table, scope_key or [], scope_lo, scope_hi,
+            batch_buckets=scope_buckets,
+        )
         del_counts = _delete_counts(spark, table)
         selected = select_candidates(
             table, del_counts, mode, target_bytes, min_files, max_files,

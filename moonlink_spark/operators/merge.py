@@ -39,7 +39,7 @@ from moonlink_spark.schema import MERGE_KEY, normalize_keys, table_identity
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import FileEntry, Snapshot
 from moonlink_spark.table.planning import plan_data_candidates
-from moonlink_spark.table.scan import FILE_COL, POS_COL, prune_entries, scan
+from moonlink_spark.table.scan import FILE_COL, POS_COL, scan
 from moonlink_spark.table.writer import (
     FLUSH_TARGET_BYTES,
     bucket_expr,
@@ -329,38 +329,19 @@ def merge_cdc_batch(
     #   2. min/max key bounds from manifest stats
     #   3. per-file key blooms: a file containing NONE of the batch's keys is
     #      dropped even when the batch is broader than the bucket count
-    # Stages 1-2 run DISTRIBUTED over parquet manifests when the table is at
-    # that scale (table/planning.py — driver holds O(survivors), never
-    # O(table)); small/JSON-manifest tables prune driver-side. Identical
-    # semantics either way.
+    # Stages 1-2 are the candidate planner (table/planning.py): a Spark job
+    # over parquet manifests at scale, the driver predicate over JSON ones.
     total_files = None
     candidates: list[FileEntry] = []
     if n_cdc > 0:
-        planned = None
-        if bounds or batch_buckets is not None:
-            planned = plan_data_candidates(
-                spark,
-                table,
-                [b[0] for b in bounds],
-                [b[1] for b in bounds],
-                [b[2] for b in bounds],
-                batch_buckets=batch_buckets,
-            )
-        if planned is not None:
-            candidates, total_files = planned
-        else:
-            all_data = table.data_entries()
-            total_files = len(all_data)
-            candidates = all_data
-            if batch_buckets is not None:
-                candidates = [
-                    e
-                    for e in candidates
-                    if e.bucket is None or e.bucket in batch_buckets
-                ]
-            for k, klo, khi in bounds:
-                if klo is not None and khi is not None:
-                    candidates = prune_entries(candidates, k, klo, khi)
+        candidates, total_files = plan_data_candidates(
+            spark,
+            table,
+            [b[0] for b in bounds],
+            [b[1] for b in bounds],
+            [b[2] for b in bounds],
+            batch_buckets=batch_buckets,
+        )
     pre_bloom = len(candidates)
     # bloom pruning shares the layout-key guard: blooms are BUILT over the
     # table's bucket key at write time, so probing them with a different

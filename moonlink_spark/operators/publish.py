@@ -37,6 +37,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import struct
 import uuid
 from dataclasses import dataclass
@@ -370,6 +371,14 @@ def publish_iceberg(
     atomically via the version-hint."""
     from moonlink_spark.table.fieldids import schema_field_id_map
 
+    # manifests, metadata and delete files are written with local file I/O
+    for what, loc in (("destination", dest), ("source table", table.location)):
+        if "://" in loc and not loc.startswith("file://"):
+            raise ValueError(
+                f"publish_iceberg writes local files only; {what} {loc!r} "
+                "is not a local path or file:// URI"
+            )
+    dest = re.sub(r"^file:/+", "/", dest)
     table.refresh()
     snap = table.head_snapshot(snapshot_id)
     if snap is None:
@@ -753,7 +762,7 @@ def read_published(spark: SparkSession, location: str) -> DataFrame:
             *[
                 x
                 for p, s in seq_by_path.items()
-                for x in (F.lit(_strip_scheme(p)), F.lit(int(s)))
+                for x in (_norm_path(F.lit(p)), F.lit(int(s)))
             ]
         )
         df = df.withColumn("__dseq", path_seq[F.col("__path")])
@@ -762,6 +771,7 @@ def read_published(spark: SparkSession, location: str) -> DataFrame:
             kdf = (
                 spark.read.parquet(e["data_file"]["file_path"])
                 .select(*keys)
+                .distinct()
                 .withColumn("__eq", F.lit(True))
             )
             joined = df.join(F.broadcast(kdf), keys, "left")
@@ -771,10 +781,6 @@ def read_published(spark: SparkSession, location: str) -> DataFrame:
             ).drop("__eq")
         df = df.drop("__dseq")
     return df.select(*cols)
-
-
-def _strip_scheme(p: str) -> str:
-    return p[len("file:"):] if p.startswith("file:") else p
 
 
 # ----------------------------------------------------------------- import

@@ -1,41 +1,40 @@
-"""Distributed scan planning — prune manifests as data, not driver state.
+"""Candidate-file planning: one pruning semantics, two executors.
 
-At the 10^12-image design point a snapshot references ~10^8-10^9 data files.
-Driver-side planning (parse every manifest entry into Python objects, then
-prune) is O(table) driver memory and CPU — the classic metadata wall. The
-moonlink reference hits the same wall with its in-memory GlobalIndex and
-answers it with persisted, mmap-probed index files
-(reference: src/moonlink/src/storage/index/persisted_bucket_hash_map.rs:73-93).
+The moonlink reference locates the files that can hold a key through its
+GlobalIndex (src/moonlink/src/storage/index/persisted_bucket_hash_map.rs:
+25-93). The engine's stand-in prunes data files by their key bucket and
+their manifest min/max stats, and every reader and writer that needs
+candidate files (MERGE probe, ``scan_range``, ``scan_values``, scoped
+compaction, the DataSource) prunes through this module.
 
-The Spark-first answer: manifests in PARQUET form (table/format.py) are
-themselves a dataset, so candidate selection for a MERGE probe runs as a
-Spark job over the manifest files — bucket-set membership, min/max interval
-overlap — and the driver only ever materializes the entries that SURVIVE
-pruning (plus per-file bloom refs, probed afterwards from sidecars). Iceberg
-plans scans over its Avro manifests with the same metadata-as-data shape.
+Semantics (``keep_entries``): a file survives when its bucket is unset or in
+the bucket set, AND for every constrained column its ``[min, max]`` meets
+ANY of that column's intervals, where either end of an interval may be
+``None`` (open). Files lacking bounds — and bounds that do not compare with
+the interval's values — are always kept: pruning is an optimization, never
+a filter.
 
-Applicability: every manifest in the snapshot must be parquet and live on
-Spark-readable storage (local paths / file:// — real clusters add s3a etc.
-through the same reader). Otherwise callers fall back to driver planning;
-both paths implement identical semantics (scan.prune_entries), and entries
-lacking bounds are always kept — pruning is an optimization, never a filter.
+Executors, chosen by the snapshot's manifest form (not by a user switch):
+
+- parquet manifests on Spark-readable storage (``plannable``) are a dataset,
+  so pruning runs as a Spark job over them and the driver materializes only
+  the SURVIVING entries — O(survivors), never O(table), which is the only
+  shape that holds at 10^8-10^9 files. Iceberg plans scans over its Avro
+  manifests with the same metadata-as-data shape.
+- JSON manifests are small by construction (format.py upgrades to parquet
+  past 4096 entries), so the driver evaluates ``keep_entries`` over the
+  parsed entries and launches no Spark job.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import DATA, FileEntry
-
-#: "false" forces driver-side planning; unset/anything else = auto
-#: (distributed exactly when the snapshot's manifests are all parquet and
-#: Spark-readable — which by construction means the table is at
-#: parquet-manifest scale).
-PLAN_DISTRIBUTED_PROP = "plan.distributed"
 
 
 def _spark_readable(path: str) -> bool:
@@ -43,15 +42,41 @@ def _spark_readable(path: str) -> bool:
 
 
 def plannable(table: Table, snapshot_id: int | None = None) -> bool:
-    prop = table.md.properties.get(PLAN_DISTRIBUTED_PROP)
-    if prop == "false":
-        return False
+    """Every manifest of the snapshot is parquet and Spark-readable."""
     snap = table.head_snapshot(snapshot_id)
     if snap is None or not snap.manifests:
         return False
     return all(
         m.endswith(".parquet") and _spark_readable(m) for m in snap.manifests
     )
+
+
+def _meets(st, intervals) -> bool:
+    if not st or st.get("min") is None or st.get("max") is None:
+        return True
+    try:
+        return any(
+            (lo is None or st["max"] >= lo) and (hi is None or st["min"] <= hi)
+            for lo, hi in intervals
+        )
+    except TypeError:  # bounds incomparable with the filter values
+        return True
+
+
+def keep_entries(
+    entries: list[FileEntry],
+    intervals: dict[str, list[tuple]],
+    buckets: set[int] | None = None,
+) -> list[FileEntry]:
+    """The driver executor: the entries that survive bucket and min/max
+    pruning (module docstring). ``intervals`` maps a column — dotted for a
+    struct leaf — to a list of ``(lo, hi)`` ranges, either end ``None``."""
+    return [
+        e
+        for e in entries
+        if (buckets is None or e.bucket is None or e.bucket in buckets)
+        and all(_meets(e.stats.get(c), ivs) for c, ivs in intervals.items())
+    ]
 
 
 def _leaf_type(schema, dotted: str) -> str | None:
@@ -83,58 +108,48 @@ def _row_to_entry(r) -> FileEntry:
     )
 
 
-def plan_data_candidates(
+def _meets_col(table: Table, col: str, intervals) -> Column:
+    """``_meets`` as a Spark expression over the manifest's stats JSON."""
+    # dotted keys are struct-leaf stats — ONE top-level JSON key containing
+    # dots, addressed with bracket syntax; bounds cast to the column's table
+    # type so overlap compares typed values (an uncastable bound is NULL,
+    # and a NULL bound keeps the file)
+    jp = f"$['{col}']" if "." in col else f"$.{col}"
+    typ = _leaf_type(table.schema, col) or "string"
+    mn = F.get_json_object("stats", f"{jp}.min").try_cast(typ)
+    mx = F.get_json_object("stats", f"{jp}.max").try_cast(typ)
+    hit = F.lit(False)
+    for lo, hi in intervals:
+        iv = F.lit(True)
+        if lo is not None:
+            iv = iv & (mx >= F.lit(lo))
+        if hi is not None:
+            iv = iv & (mn <= F.lit(hi))
+        hit = hit | iv
+    return mn.isNull() | mx.isNull() | hit
+
+
+def _plan(
     spark: SparkSession,
     table: Table,
-    key,
-    lo,
-    hi,
-    batch_buckets: set[int] | None = None,
-    snapshot_id: int | None = None,
-) -> tuple[list[FileEntry], int] | None:
-    """MERGE-probe candidate selection as ONE Spark job over the snapshot's
-    parquet manifests. Returns (surviving data entries, total data-file
-    count), or None when the snapshot is not distributed-plannable (caller
-    falls back to driver-side pruning).
-
-    Semantics match the driver path exactly: a file survives when
-    (a) its bucket is unset or in the batch's bucket set, AND
-    (b) for EVERY key column, its [min,max] bounds are absent or intersect
-        the batch's [lo, hi] for that column.
-
-    ``key`` may be a composite column list (IdentityProp::Keys), with ``lo``
-    / ``hi`` aligned lists of per-column batch bounds; a None bound (e.g. a
-    binary identity column with no orderable stats) skips that column's test.
-    """
-    from moonlink_spark.schema import normalize_keys
-
-    keys = normalize_keys(key)
-    los = lo if isinstance(lo, (list, tuple)) else [lo]
-    his = hi if isinstance(hi, (list, tuple)) else [hi]
+    intervals: dict[str, list[tuple]],
+    buckets: set[int] | None,
+    snapshot_id: int | None,
+) -> tuple[list[FileEntry], int]:
+    """(surviving data entries, total data-file count) of the snapshot, by
+    the executor its manifest form selects."""
     if not plannable(table, snapshot_id):
-        return None
+        entries = table.data_entries(snapshot_id)
+        return keep_entries(entries, intervals, buckets), len(entries)
     snap = table.head_snapshot(snapshot_id)
     df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
-
     keep = F.lit(True)
-    if batch_buckets is not None:
+    if buckets is not None:
         keep = F.col("bucket").isNull() | F.col("bucket").isin(
-            [int(b) for b in batch_buckets]
+            [int(b) for b in buckets]
         )
-    # bounds live in the per-entry stats JSON; cast to each key's table type
-    # so interval overlap compares typed values, not strings
-    for k, klo, khi in zip(keys, los, his):
-        if klo is None or khi is None:
-            continue
-        # dotted keys are struct-leaf stats — ONE top-level JSON key
-        # containing dots, addressed with bracket syntax
-        jp = f"$['{k}']" if "." in k else f"$.{k}"
-        typ = _leaf_type(table.schema, k) or "string"
-        mn = F.get_json_object("stats", f"{jp}.min").cast(typ)
-        mx = F.get_json_object("stats", f"{jp}.max").cast(typ)
-        keep = keep & (
-            mn.isNull() | mx.isNull() | ~((mx < F.lit(klo)) | (mn > F.lit(khi)))
-        )
+    for col, ivs in intervals.items():
+        keep = keep & _meets_col(table, col, ivs)
     # survivors stream to the driver per-partition (no single-task gather),
     # so driver memory is O(survivors), never O(table); the total is a
     # second metadata-scale job (manifest bytes ~ 10^-5 of table bytes)
@@ -147,45 +162,44 @@ def plan_data_candidates(
     return [_row_to_entry(r) for r in hits], total
 
 
+def plan_data_candidates(
+    spark: SparkSession,
+    table: Table,
+    key,
+    lo,
+    hi,
+    batch_buckets: set[int] | None = None,
+    snapshot_id: int | None = None,
+) -> tuple[list[FileEntry], int]:
+    """Candidate files for a conjunction of per-column ranges: the data
+    entries whose bucket is unset or in ``batch_buckets`` and whose bounds
+    meet ``[lo, hi]`` on EVERY key column. Returns (survivors, total
+    data-file count).
+
+    ``key`` may be a composite column list (IdentityProp::Keys), with ``lo``
+    / ``hi`` aligned lists of per-column bounds; a ``None`` bound leaves
+    that end of the range open."""
+    from moonlink_spark.schema import normalize_keys
+
+    los = lo if isinstance(lo, (list, tuple)) else [lo]
+    his = hi if isinstance(hi, (list, tuple)) else [hi]
+    intervals = {
+        k: [(klo, khi)] for k, klo, khi in zip(normalize_keys(key), los, his)
+    }
+    return _plan(spark, table, intervals, batch_buckets, snapshot_id)
+
+
 def plan_data_candidates_union(
     spark: SparkSession,
     table: Table,
     key: str,
     ranges: list[tuple],
     snapshot_id: int | None = None,
-) -> tuple[list[FileEntry], int] | None:
-    """File pruning for a UNION of value ranges on one column in ONE
-    planning pass (one Spark job over the parquet manifests) — the IVF
-    probe path's planner (VERDICT r4 #4: previously one ``scan_range`` —
-    i.e. one planner invocation — per probed cell; n_probe cells × many
-    queries meant hundreds of metadata jobs).
-
-    A file survives when its [min,max] intersects ANY of ``ranges``
-    (files lacking bounds always survive — pruning is an optimization,
-    never a filter). Returns (survivors, total) or None when the snapshot
-    is not distributed-plannable (caller falls back to driver-side
-    pruning with identical semantics)."""
-    if not ranges:
-        return [], 0
-    if not plannable(table, snapshot_id):
-        return None
-    snap = table.head_snapshot(snapshot_id)
-    df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
-    jp = f"$['{key}']" if "." in key else f"$.{key}"
-    typ = _leaf_type(table.schema, key) or "string"
-    mn = F.get_json_object("stats", f"{jp}.min").cast(typ)
-    mx = F.get_json_object("stats", f"{jp}.max").cast(typ)
-    any_hit = F.lit(False)
-    for klo, khi in ranges:
-        any_hit = any_hit | ~((mx < F.lit(klo)) | (mn > F.lit(khi)))
-    keep = mn.isNull() | mx.isNull() | any_hit
-    df = df.cache()
-    try:
-        total = df.count()
-        hits = df.filter(keep).collect()
-    finally:
-        df.unpersist()
-    return [_row_to_entry(r) for r in hits], total
+) -> tuple[list[FileEntry], int]:
+    """Candidate files for a UNION of value ranges on one column, planned in
+    one pass — the IVF probe's planner (one planning pass for all probed
+    cells, not one per cell). Returns (survivors, total data-file count)."""
+    return _plan(spark, table, {key: list(ranges)}, None, snapshot_id)
 
 
 def plan_compaction_candidates(

@@ -19,7 +19,8 @@ else AQE picks a shuffle join.
 File pruning: per-file min/max bounds from manifests prune data files before
 the scan starts (the moonlink GlobalIndex's job — locate keys without reading
 everything — done the Spark way, reference:
-src/moonlink/src/storage/index/persisted_bucket_hash_map.rs:25-93).
+src/moonlink/src/storage/index/persisted_bucket_hash_map.rs:25-93); the
+candidate planner lives in table/planning.py.
 """
 
 from __future__ import annotations
@@ -44,21 +45,6 @@ _BROADCAST_DELETE_ROWS = 1_000_000
 
 def _norm_path(col: Column) -> Column:
     return F.regexp_replace(col, r"^file:/+", "/")
-
-
-def prune_entries(
-    entries: list[FileEntry], column: str, lo, hi
-) -> list[FileEntry]:
-    """Keep files whose [min,max] for ``column`` intersects [lo,hi].
-    Files lacking bounds are kept (bounds are an optimization, never filter)."""
-    out = []
-    for e in entries:
-        st = e.stats.get(column)
-        if not st or st.get("min") is None or st.get("max") is None:
-            out.append(e)
-        elif not (st["max"] < lo or st["min"] > hi):
-            out.append(e)
-    return out
 
 
 def scan(
@@ -240,7 +226,9 @@ def attach_data_seq(
             f"__dpath string, {_DSEQ_COL} long",
         )
     )
-    return df.join(seq_map, df[FILE_COL] == seq_map["__dpath"], "left").drop("__dpath")
+    # scan rows carry the normalized path (file:///a -> /a); so must the map
+    on = df[FILE_COL] == _norm_path(seq_map["__dpath"])
+    return df.join(seq_map, on, "left").drop("__dpath")
 
 
 def eq_match_cond(df: DataFrame, keys: list[str]) -> Column:
@@ -290,10 +278,8 @@ def scan_range(
     ``key`` may be a list of columns with aligned ``lo``/``hi`` lists — a
     conjunction of per-column ranges (e.g. a composite-identity probe or a
     key+timestamp slice); a file survives only if EVERY column's bounds
-    intersect its stats. File-level pruning runs distributed over parquet
-    manifests when the table is at that scale (table/planning.py — driver
-    holds O(survivors)), else driver-side over the same bounds; semantics
-    are identical and files lacking bounds are always kept. The residual
+    intersect its stats (table/planning.py; files lacking bounds are
+    always kept). The residual
     ``col BETWEEN lo AND hi`` conjunction then lands on the parquet scan as
     pushed predicates, so row-group stats prune within surviving files too.
     """
@@ -305,15 +291,9 @@ def scan_range(
     his = list(hi) if isinstance(hi, (list, tuple)) else [hi]
     if not (len(keys) == len(los) == len(his)):
         raise ValueError("key/lo/hi must align")
-    planned = plan_data_candidates(
+    entries, _ = plan_data_candidates(
         spark, table, keys, los, his, snapshot_id=snapshot_id
     )
-    if planned is not None:
-        entries = planned[0]
-    else:
-        entries = table.data_entries(snapshot_id)
-        for k, klo, khi in zip(keys, los, his):
-            entries = prune_entries(entries, k, klo, khi)
     df = scan(spark, table, snapshot_id=snapshot_id, data_entries=entries, **kw)
     cond = F.lit(True)
     for k, klo, khi in zip(keys, los, his):
@@ -362,22 +342,9 @@ def scan_values(
         return scan(
             spark, table, snapshot_id=snapshot_id, data_entries=[], **kw
         )
-    runs = _value_runs(values)
-    planned = plan_data_candidates_union(
-        spark, table, key, runs, snapshot_id=snapshot_id
+    entries, _ = plan_data_candidates_union(
+        spark, table, key, _value_runs(values), snapshot_id=snapshot_id
     )
-    if planned is not None:
-        entries = planned[0]
-    else:
-        entries = []
-        for e in table.data_entries(snapshot_id):
-            st = e.stats.get(key)
-            if not st or st.get("min") is None or st.get("max") is None:
-                entries.append(e)
-            elif any(
-                not (st["max"] < lo or st["min"] > hi) for lo, hi in runs
-            ):
-                entries.append(e)
     df = scan(spark, table, snapshot_id=snapshot_id, data_entries=entries, **kw)
     return df.filter(F.col(key).isin(values))
 

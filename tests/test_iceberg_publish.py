@@ -22,6 +22,7 @@ import json
 import os
 import struct
 
+import pytest
 from pyspark.sql import functions as F
 
 from moonlink_spark.operators.merge import merge_cdc_batch
@@ -497,3 +498,74 @@ def test_current_schema_selected_by_schema_id(spark, tmp_path):
     imp = import_iceberg(spark, res.location, str(tmp_path / "imp"))
     assert [f.name for f in imp.schema.fields] == [f["name"] for f in current["fields"]]
     assert scan(spark, imp).select(*COLS).orderBy("image_id").collect() == want
+
+
+def test_repeated_eq_delete_key_does_not_duplicate_rows(spark, tmp_path):
+    """An equality-delete file may list a key more than once; rows that
+    survive it (written at or after its sequence number) must still come
+    back once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from moonlink_spark.operators.publish import _load_published
+
+    t, res = _mk_published(spark, tmp_path)
+    _, _, deletes = _load_published(res.location)
+    (eq,) = [e for e in deletes if e["data_file"]["content"] == 2]
+    path = eq["data_file"]["file_path"]
+    keys = pq.read_table(path)
+    pq.write_table(pa.concat_tables([keys, keys]), path)
+
+    want = scan(spark, t).select(*COLS).orderBy("image_id").collect()
+    got = read_published(spark, res.location).select(*COLS).orderBy("image_id")
+    assert got.collect() == want
+
+
+def test_file_uri_data_paths_keep_sequence_rule(spark, tmp_path):
+    """A table at a file:// location publishes file://-qualified data paths;
+    equality deletes still apply only to data files with a strictly lower
+    sequence number, so the lazy MERGE's own upserts survive."""
+    from moonlink_spark.operators.publish import _load_published
+
+    t = create_table(f"file://{tmp_path}/src", IMAGES_SCHEMA)
+    t.commit(
+        "append",
+        added=write_bucketed_data_files(
+            spark, _rows(spark, 100), t.new_data_dir(), "image_id", 2
+        ),
+        lsn=1,
+    )
+    merge_cdc_batch(
+        spark, t, _cdc(spark, 100, 10, 20, 30, 35, "v2"), lsn=2, mode="lazy"
+    )
+    res = publish_iceberg(spark, t, f"file://{tmp_path}/pub")
+    assert res.eq_delete_files == 1
+    _, data, _ = _load_published(res.location)
+    assert all(e["data_file"]["file_path"].startswith("file:") for e in data)
+
+    want = scan(spark, t).select(*COLS).orderBy("image_id").collect()
+    assert len(want) == 95
+    assert sum(r["caption"].startswith("v2") for r in want) == 10
+    got = read_published(spark, res.location).select(*COLS).orderBy("image_id")
+    assert got.collect() == want
+
+
+def test_publish_rejects_non_local_destination(spark, tmp_path):
+    """publish_iceberg writes with local file I/O: an object-store
+    destination fails up front and leaves nothing behind."""
+    import pytest
+
+    from moonlink_spark.table.io import accessor_for
+
+    t = create_table(str(tmp_path / "src"), IMAGES_SCHEMA)
+    t.commit(
+        "append",
+        added=write_bucketed_data_files(
+            spark, _rows(spark, 20), t.new_data_dir(), "image_id", 2
+        ),
+        lsn=1,
+    )
+    dest = "mem://publish-dest/tbl"
+    with pytest.raises(ValueError, match="not a local path"):
+        publish_iceberg(spark, t, dest)
+    assert accessor_for(dest).list("mem://publish-dest") == []

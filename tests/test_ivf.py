@@ -90,13 +90,14 @@ def test_index_build_and_probe(spark, tmp_path):
 def test_probe_reads_subset_of_files(spark, tmp_path):
     """A 1-cell probe's planned read lists fewer files than the table has —
     the manifest stat prune is doing file-level work, not row filtering."""
-    from moonlink_spark.table.scan import prune_entries, scan_range
+    from moonlink_spark.table.planning import keep_entries
+    from moonlink_spark.table.scan import scan_range
 
     t, dim = _mk(spark, tmp_path)
     ivf_index_table(spark, t, dim=dim, n_cells=16, target_bytes=8 << 10)
     t.refresh()
     entries = t.data_entries()
-    surv = prune_entries(entries, "cell", 0, 0)
+    surv = keep_entries(entries, {"cell": [(0, 0)]})
     assert len(surv) < len(entries), (len(surv), len(entries))
     # and the surviving-file scan returns exactly cell-0 rows
     assert (

@@ -19,8 +19,8 @@ from pyspark.sql.types import (
 
 from moonlink_spark.table.catalog import create_table
 from moonlink_spark.table.format import MANIFEST_FORMAT_PROP
-from moonlink_spark.table.planning import plan_data_candidates, plannable
-from moonlink_spark.table.scan import prune_entries, scan_range
+from moonlink_spark.table.planning import keep_entries, plan_data_candidates, plannable
+from moonlink_spark.table.scan import scan_range
 from moonlink_spark.table.writer import write_data_files
 
 SCHEMA = StructType(
@@ -89,7 +89,7 @@ def _expected(lo=LO, hi=HI):
 def test_scan_range_on_struct_leaf_driver_path(spark, tmp_path):
     t, entries = _mk(spark, tmp_path, "json")
     assert not plannable(t)  # json manifests -> driver pruning
-    kept = prune_entries(entries, "meta.a", LO, HI)
+    kept = keep_entries(entries, {"meta.a": [(LO, HI)]})
     assert 0 < len(kept) < len(entries)
     got = scan_range(spark, t, "meta.a", LO, HI).select("k").toPandas()
     assert sorted(got["k"]) == _expected()
@@ -98,12 +98,10 @@ def test_scan_range_on_struct_leaf_driver_path(spark, tmp_path):
 def test_scan_range_on_struct_leaf_distributed_path(spark, tmp_path):
     t, entries = _mk(spark, tmp_path, "parquet")
     assert plannable(t)
-    planned = plan_data_candidates(spark, t, "meta.a", LO, HI)
-    assert planned is not None
-    survivors, total = planned
+    survivors, total = plan_data_candidates(spark, t, "meta.a", LO, HI)
     assert total == len(entries)
     # distributed survivors == driver-side semantics, file for file
-    driver_kept = {e.path for e in prune_entries(entries, "meta.a", LO, HI)}
+    driver_kept = {e.path for e in keep_entries(entries, {"meta.a": [(LO, HI)]})}
     assert {e.path for e in survivors} == driver_kept
     assert 0 < len(survivors) < total
     got = scan_range(spark, t, "meta.a", LO, HI).select("k").toPandas()

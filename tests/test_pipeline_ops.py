@@ -127,32 +127,3 @@ def test_lsh_topk_recall(spark, emb):
     a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.3, recall  # approximate by design; plumbing check
-
-
-def test_image_features_and_resize(spark):
-    from moonlink_spark.datagen import generate_images
-    from moonlink_spark.functions.multimodal import (
-        image_features,
-        perceptual_hash,
-        resize_images,
-    )
-
-    imgs = generate_images(spark, 40, partitions=4).cache()
-    feats = image_features(imgs)
-    rows = feats.collect()
-    assert len(rows) == 40
-    for r in rows:
-        assert 0 <= r["brightness"] <= 255 and r["contrast"] > 0
-    rs = resize_images(imgs, 16, 16).collect()
-    assert all(r["w"] == 16 and r["h"] == 16 for r in rs)
-    ah = perceptual_hash(imgs)
-    assert ah.count() == 40
-
-
-def test_frame_sample_is_stub(spark):
-    from moonlink_spark.functions.multimodal import frame_sample_stub
-
-    df = spark.createDataFrame([("v1", b"\x00")], "video_id string, bytes binary")
-    out = frame_sample_stub(df)
-    with pytest.raises(Exception):
-        out.collect()

@@ -4,7 +4,8 @@ parquet scan (ReadSchema), range predicates land as PushedFilters (row-group
 pruning inside surviving files), scans stay inside WholeStageCodegen, and
 the MERGE probe broadcasts the CDC key side instead of shuffling the table.
 Reads and DV writes run no Python worker, building a read launches no Spark
-job, and a micro-MERGE's job count is pinned."""
+job, planning over JSON manifests and DataSource partitioning launch none,
+and a micro-MERGE's job count is pinned."""
 
 import contextlib
 import io
@@ -17,6 +18,7 @@ from moonlink_spark.datagen import generate_images
 from moonlink_spark.operators.merge import merge_cdc_batch
 from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.catalog import create_table
+from moonlink_spark.table.planning import plan_data_candidates, plannable
 from moonlink_spark.table.scan import scan, scan_range, scan_values
 from moonlink_spark.table.writer import (
     BUCKETS_PROP,
@@ -228,6 +230,41 @@ def test_building_reads_launches_no_jobs(spark, tmp_path):
     scan(spark, t, columns=["image_id"], with_pos=True)
     scan_values(spark, t, "image_id", [f"img{i:012d}" for i in range(0, 800, 100)])
     assert _jobs(spark) == j0
+
+
+def test_json_manifest_planning_launches_no_jobs(spark, tmp_path):
+    """Candidate planning over JSON manifests runs the driver executor."""
+    t, _ = _wide(spark, tmp_path)
+    assert not plannable(t)
+    j0 = _jobs(spark)
+    survivors, total = plan_data_candidates(
+        spark, t, "image_id", "img000000000100", "img000000000300",
+        batch_buckets={1, 5},
+    )
+    assert _jobs(spark) == j0
+    assert 0 < len(survivors) < total
+
+
+def test_datasource_planning_launches_no_jobs(spark, tmp_path):
+    """DataSource planning — filter pushdown and input splits — prunes on
+    the driver: no Spark job."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from moonlink_spark.datasource import MoonlinkBatchReader
+
+    t, _ = _wide(spark, tmp_path)
+    j0 = _jobs(spark)
+    reader = MoonlinkBatchReader({"path": t.location})
+    reader.pushFilters(
+        [
+            GreaterThanOrEqual(("image_id",), "img000000000100"),
+            LessThan(("image_id",), "img000000000300"),
+        ]
+    )
+    parts = reader.partitions()
+    assert _jobs(spark) == j0
+    files = [m.data_path for p in parts for m in (p.members or [p])]
+    assert 0 < len(files) < len(t.data_entries())
 
 
 # measured: 4 for the stats/bloom collect, 2 for the insert write, 4 for the

@@ -1,9 +1,17 @@
 """Parquet manifests + distributed scan planning (metadata-as-data)."""
 
 import json
+import random
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 import moonlink_spark.table.format as fmt_mod
 from moonlink_spark.cdc import CdcScheduleGenerator, ReferenceTable, to_spark
@@ -11,9 +19,13 @@ from moonlink_spark.operators.maintenance import optimize_table
 from moonlink_spark.operators.merge import merge_cdc_batch
 from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.catalog import create_table
-from moonlink_spark.table.format import MANIFEST_FORMAT_PROP, read_manifest
-from moonlink_spark.table.planning import plan_data_candidates, plannable
-from moonlink_spark.table.scan import prune_entries, scan
+from moonlink_spark.table.format import MANIFEST_FORMAT_PROP, FileEntry, read_manifest
+from moonlink_spark.table.planning import (
+    keep_entries,
+    plan_data_candidates,
+    plannable,
+)
+from moonlink_spark.table.scan import scan
 from moonlink_spark.table.writer import BUCKETS_PROP, bucket_id
 
 
@@ -79,8 +91,7 @@ def test_plan_distributed_matches_driver_prune(spark, ptable):
         spark, ptable, "image_id", lo, hi, batch_buckets=buckets
     )
     assert total == len(all_data)
-    drv = [e for e in all_data if e.bucket is None or e.bucket in buckets]
-    drv = prune_entries(drv, "image_id", lo, hi)
+    drv = keep_entries(all_data, {"image_id": [(lo, hi)]}, buckets)
     assert sorted(e.path for e in planned) == sorted(e.path for e in drv)
     # full entry fidelity, not just paths (bloom refs ride in stats)
     by_path = {e.path: e for e in drv}
@@ -201,3 +212,118 @@ def test_auto_upgrade_to_parquet_above_threshold(tmp_path, monkeypatch):
     assert p.endswith(".parquet")
     back = read_manifest(p)
     assert [e.to_dict() for e in back] == [e.to_dict() for e in entries]
+
+
+# ------------------------------------------- executor parity (property test)
+
+_PROP_SCHEMA = StructType(
+    [
+        StructField("k", StringType(), True),
+        StructField("n", LongType(), True),
+        StructField("meta", StructType([StructField("a", IntegerType(), True)])),
+    ]
+)
+_PROP_KINDS = {"k": "str", "n": "int", "meta.a": "int"}
+
+
+def _rand_value(rng, kind):
+    if kind == "int":
+        return rng.randrange(-20, 100)
+    return "".join(rng.choice("abcde") for _ in range(rng.randint(1, 3)))
+
+
+def _rand_stat(rng, kind):
+    """A column's manifest stats: bounded, or with a missing/None end, or
+    (int columns) a bound that does not compare with the filter values."""
+    r = rng.random()
+    lo, hi = sorted(_rand_value(rng, kind) for _ in range(2))
+    st = {"min": lo, "max": hi, "nulls": 0}
+    if r < 0.1:
+        st["min"] = None
+    elif r < 0.2:
+        st["max"] = None
+    elif r < 0.25:
+        del st["min"]
+    elif r < 0.3 and kind == "int":
+        st["min"], st["max"] = "x", "y"
+    return st
+
+
+def _rand_entries(rng, i):
+    out = []
+    for j in range(rng.randint(1, 12)):
+        stats = {
+            c: _rand_stat(rng, kind)
+            for c, kind in _PROP_KINDS.items()
+            if rng.random() < 0.85
+        }
+        out.append(
+            FileEntry(
+                "data",
+                f"/prop/{i}/f{j}.parquet",
+                rng.randint(1, 1000),
+                rng.randint(1, 1 << 20),
+                1,
+                stats=stats,
+                bucket=rng.choice([None, None, 0, 1, 2, 3]),
+            )
+        )
+    return out
+
+
+def _rand_intervals(rng):
+    out = {}
+    for c in rng.sample(sorted(_PROP_KINDS), rng.randint(0, 3)):
+        ivs = []
+        for _ in range(rng.randint(1, 3)):
+            lo, hi = sorted(_rand_value(rng, _PROP_KINDS[c]) for _ in range(2))
+            ivs.append(
+                (None if rng.random() < 0.2 else lo, None if rng.random() < 0.2 else hi)
+            )
+        out[c] = ivs
+    return out
+
+
+def _rand_buckets(rng):
+    r = rng.random()
+    if r < 0.3:
+        return None
+    if r < 0.4:
+        return set()
+    return set(rng.sample(range(4), rng.randint(1, 3)))
+
+
+def test_executors_agree_on_random_manifests(spark, tmp_path):
+    """The distributed executor (parquet manifests) and the driver executor
+    (JSON manifests) keep the same files, with identical entries, on 200
+    seeded random entry sets: int and string stats, missing or None bounds,
+    incomparable bounds, open-ended intervals, multi-interval unions, and
+    bucket sets over files that include un-bucketed ones."""
+    from moonlink_spark.table.planning import _plan
+
+    rng = random.Random(20240611)
+    kept = pruned = 0
+    for i in range(200):
+        entries = _rand_entries(rng, i)
+        intervals, buckets = _rand_intervals(rng), _rand_buckets(rng)
+        results = []
+        for fmt in ("json", "parquet"):
+            t = create_table(
+                str(tmp_path / f"{fmt}{i}"),
+                _PROP_SCHEMA,
+                properties={MANIFEST_FORMAT_PROP: fmt},
+            )
+            t.commit("append", added=entries, lsn=1)
+            assert plannable(t) == (fmt == "parquet")
+            survivors, total = _plan(spark, t, intervals, buckets, None)
+            assert total == len(entries)
+            results.append(sorted((e.to_dict() for e in survivors), key=lambda d: d["path"]))
+        drv, dist = results
+        case = (entries, intervals, buckets)
+        assert [d["path"] for d in dist] == [d["path"] for d in drv], case
+        assert dist == drv, case
+        want = keep_entries(entries, intervals, buckets)
+        assert [d["path"] for d in drv] == sorted(e.path for e in want), case
+        kept += len(drv)
+        pruned += len(entries) - len(drv)
+    assert kept > 200 and pruned > 200, (kept, pruned)

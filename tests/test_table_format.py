@@ -7,7 +7,8 @@ from moonlink_spark.datagen import generate_images
 from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.catalog import CommitConflict, create_table, load_table
 from moonlink_spark.table.format import DELETES, FileEntry
-from moonlink_spark.table.scan import prune_entries, scan, scan_at_lsn
+from moonlink_spark.table.planning import keep_entries
+from moonlink_spark.table.scan import scan, scan_at_lsn
 from moonlink_spark.table.writer import write_data_files, write_delete_files
 
 
@@ -131,7 +132,7 @@ def test_prune_entries():
     e1 = FileEntry("data", "/a", 1, 1, 1, {"image_id": {"min": "img0", "max": "img4"}})
     e2 = FileEntry("data", "/b", 1, 1, 1, {"image_id": {"min": "img5", "max": "img9"}})
     e3 = FileEntry("data", "/c", 1, 1, 1, {})  # no stats → kept
-    kept = prune_entries([e1, e2, e3], "image_id", "img6", "img7")
+    kept = keep_entries([e1, e2, e3], {"image_id": [("img6", "img7")]})
     assert [e.path for e in kept] == ["/b", "/c"]
 
 
