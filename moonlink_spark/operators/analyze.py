@@ -35,6 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.io import accessor_for
 from moonlink_spark.table.puffin import read_all_blobs, write_puffin
@@ -194,7 +195,8 @@ def stats_dataframe(spark: SparkSession, table: Table) -> DataFrame:
         )
         for c, st in sorted(cols.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column string, snapshot_id long, row_count long, ndv long, "
         "null_count long, total_size_bytes long",

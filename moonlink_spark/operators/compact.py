@@ -46,6 +46,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark.checkpoint import JobCheckpoint
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import EQ_DELETES, FileEntry, Snapshot
 from moonlink_spark.table.io import accessor_for
@@ -155,8 +156,8 @@ def rewrite_position_deletes(
     if len(dels) < min_files:
         return RewriteDeletesResult(None, len(dels), len(dels), 0, skipped=True)
     pos = read_delete_positions(spark, dels)
-    live = spark.createDataFrame(
-        [(e.path,) for e in table.data_entries()], "lp string"
+    live = local_frame(
+        spark, {"lp": [e.path for e in table.data_entries()]}, "lp string"
     )
     kept = pos.join(
         F.broadcast(live), pos["file_path"] == live["lp"], "left_semi"
@@ -302,7 +303,7 @@ def removable_delete_files(
     # one per position in v1) — schema-projected read covers both formats
     ddf = spark.read.schema("file_path string").parquet(*[e.path for e in dels])
     removed = F.broadcast(
-        spark.createDataFrame([(p,) for p in removed_data_paths], "rp string")
+        local_frame(spark, {"rp": removed_data_paths}, "rp string")
     )
     refs = (
         ddf.withColumn("src", F.input_file_name())
@@ -335,9 +336,7 @@ def removable_eq_delete_files(
     if plannable(table):
         snap = table.head_snapshot()
         df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
-        rem = spark.createDataFrame(
-            [(p,) for p in removed_data_paths] or [("",)], "rp string"
-        )
+        rem = local_frame(spark, {"rp": removed_data_paths}, "rp string")
         row = (
             df.join(F.broadcast(rem), df["path"] == rem["rp"], "left_anti")
             .agg(F.min("sequence_number").alias("m"))
@@ -513,9 +512,7 @@ def compact(
             # selected files — O(selected) driver, pulled via a semi join
             del_counts: dict[str, int] = {}
             if selected and dc_df is not None:
-                sel = spark.createDataFrame(
-                    [(e.path,) for e in selected], "p string"
-                )
+                sel = local_frame(spark, {"p": [e.path for e in selected]}, "p string")
                 del_counts = {
                     r["file_path"]: r["n"]
                     for r in dc_df.join(

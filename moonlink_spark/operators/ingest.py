@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql.types import StructType
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import Snapshot
 from moonlink_spark.table.stats import collect_file_entries
@@ -76,7 +77,7 @@ def _distinct_schema_samples(spark: SparkSession, paths: list[str]) -> list[str]
 
         pairs = [
             (r.path, r.sig)
-            for r in spark.createDataFrame([(p,) for p in paths], "path string")
+            for r in local_frame(spark, {"path": paths}, "path string")
             .repartition(max(len(paths) // 256, 2))
             .mapInPandas(run, schema="path string, sig string")
             .collect()

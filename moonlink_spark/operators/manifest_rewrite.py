@@ -22,6 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import DATA, DELETES, Snapshot
 from moonlink_spark.table.writer import write_delete_files
@@ -57,7 +58,7 @@ def rewrite_manifests(
 
         live_paths = {e.path for e in data_entries}
         ddf = read_delete_positions(spark, delete_entries)
-        live_df = spark.createDataFrame([(p,) for p in live_paths], "file_path string")
+        live_df = local_frame(spark, {"file_path": live_paths}, "file_path string")
         # no dropDuplicates needed: the DV repack (write_delete_files →
         # pack_positions) sets each position's bit once per data file
         swept = ddf.join(F.broadcast(live_df), "file_path", "left_semi")

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the maintenance engine.
+"""SparkSession factory tuned for the maintenance engine, and the one way
+the engine hands driver-built rows to Spark (``local_frame``).
 
 local[N] in this sandbox; the same configs are what we'd submit with
 ``spark-submit --py-files`` on a real cluster (AQE on, Arrow on, shuffle
@@ -8,8 +9,10 @@ partitions sized to cores).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Mapping, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -94,3 +97,41 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows_or_columns: Sequence[tuple] | Mapping[str, Iterable],
+    schema: StructType | str,
+) -> DataFrame:
+    """A driver-built frame (row tuples, or a dict of column name -> values)
+    as a JVM ``LocalRelation``, shipped through Arrow.
+
+    ``spark.createDataFrame(list_of_rows)`` is a ``LogicalRDD`` of pickled
+    rows: every query over it starts Python workers to decode them. An
+    Arrow table becomes a ``LocalRelation`` instead (whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says), which Spark scans
+    and broadcasts with no Python worker. ``schema`` (a ``StructType`` or
+    DDL string) types the columns, and an empty input keeps it; a ``None``
+    in a non-nullable field raises ``ValueError`` as the list path does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    if isinstance(rows_or_columns, Mapping):
+        cols = [list(rows_or_columns[n]) for n in names]
+    else:
+        rows = list(rows_or_columns)
+        bad = next((r for r in rows if len(r) != len(names)), None)
+        if bad is not None:
+            raise ValueError(f"row {bad!r} does not have {len(names)} fields {names}")
+        cols = list(zip(*rows)) or [[]] * len(names)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)]
+    for f, a in zip(schema.fields, arrays):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"field {f.name}: not nullable, but got None")
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -54,6 +54,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.format import FileEntry
 from moonlink_spark.table.io import accessor_for
 
@@ -280,8 +281,8 @@ def prune_by_bloom_distributed(
                         keep.append(path)
             yield pd.DataFrame({"path": keep})
 
-    cand = spark.createDataFrame(
-        [(e.path, r) for e, r in remote], "path string, ref string"
+    cand = local_frame(
+        spark, [(e.path, r) for e, r in remote], "path string, ref string"
     ).repartition("ref")
     surviving = {
         r["path"]

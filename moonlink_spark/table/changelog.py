@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.dv import read_delete_positions
 from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES, Snapshot
@@ -282,7 +283,7 @@ def scan_changes(
                 StructField(CHANGE_LSN_COL, LongType()),
             ]
         )
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, [], empty)
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)

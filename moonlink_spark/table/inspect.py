@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import read_manifest
 
@@ -69,7 +70,7 @@ def snapshots(spark: SparkSession, table: Table) -> DataFrame:
                 json.dumps(sm, sort_keys=True),
             )
         )
-    return spark.createDataFrame(rows, _SNAPSHOTS_SCHEMA)
+    return local_frame(spark, rows, _SNAPSHOTS_SCHEMA)
 
 
 _HISTORY_SCHEMA = StructType(
@@ -99,7 +100,7 @@ def history(spark: SparkSession, table: Table) -> DataFrame:
         )
         for s in sorted(table.md.snapshots, key=lambda s: s.sequence_number)
     ]
-    return spark.createDataFrame(rows, _HISTORY_SCHEMA)
+    return local_frame(spark, rows, _HISTORY_SCHEMA)
 
 
 _MANIFESTS_SCHEMA = StructType(
@@ -130,7 +131,7 @@ def manifests(spark: SparkSession, table: Table, snapshot_id: int | None = None)
                 len(entries) - n_data,
             )
         )
-    return spark.createDataFrame(rows, _MANIFESTS_SCHEMA)
+    return local_frame(spark, rows, _MANIFESTS_SCHEMA)
 
 
 _FILES_SCHEMA = StructType(
@@ -179,7 +180,7 @@ def files(
             )
             for e in table.entries(snapshot_id=snapshot_id)
         ]
-        df = spark.createDataFrame(rows, _FILES_SCHEMA)
+        df = local_frame(spark, rows, _FILES_SCHEMA)
     if content is not None:
         df = df.filter(F.col("content") == content)
     return df
@@ -219,7 +220,7 @@ def refs(spark: SparkSession, table: Table) -> DataFrame:
                 r.get("max_ref_age_ms"),
             )
         )
-    return spark.createDataFrame(rows, _REFS_SCHEMA)
+    return local_frame(spark, rows, _REFS_SCHEMA)
 
 
 def stats(spark: SparkSession, table: Table) -> DataFrame:

@@ -16,6 +16,12 @@ small (the common case — compaction keeps deleted% < 50,
 reference: src/moonlink/src/storage/compaction/compaction_config.rs:47-54),
 else AQE picks a shuffle join.
 
+Equality deletes anti-join on the identity key under the sequence rule: each
+row is stamped with its data file's sequence number from a driver-built
+(path -> seq) map. That map, and the empty scan, reach Spark as Arrow
+``LocalRelation``s (session.local_frame), so no read runs a Python worker —
+no per-row work on delete application, as in the reference's read path.
+
 File pruning: per-file min/max bounds from manifests prune data files before
 the scan starts (the moonlink GlobalIndex's job — locate keys without reading
 everything — done the Spark way, reference:
@@ -29,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.format import FileEntry
 
@@ -97,7 +104,7 @@ def scan(
             [f for f in schema.fields if f.name in out_cols]
             + ([StructField(FILE_COL, StringType()), StructField(POS_COL, LongType())] if with_pos else [])
         )
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
 
     def _read(sch, ents):
         return (
@@ -219,9 +226,12 @@ def attach_data_seq(
     spark: SparkSession, df: DataFrame, data_entries: list[FileEntry]
 ) -> DataFrame:
     """Stamp each scan row with its data file's sequence number via a tiny
-    broadcast (path -> seq) — the per-row input to the sequence rule."""
+    broadcast (path -> seq) — the per-row input to the sequence rule. The
+    map is a LocalRelation (session.local_frame): Spark broadcasts it with
+    no Python worker to decode it."""
     seq_map = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(e.path, e.sequence_number) for e in data_entries],
             f"__dpath string, {_DSEQ_COL} long",
         )

@@ -18,6 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.format import DATA, FileEntry
 
 _STATS_SCHEMA = "path string, record_count long, file_size_bytes long, stats_json string"
@@ -209,7 +210,7 @@ def collect_file_entries(
     if len(paths) <= 512:
         pdf = _footer_stats(pd.Series(paths), expected_field_ids)
     else:
-        df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+        df = local_frame(spark, {"path": paths}, "path string").repartition(
             min(len(paths) // 32, 256)
         )
         pdf = df.mapInPandas(_mapper, schema=_STATS_SCHEMA).toPandas()
@@ -232,6 +233,6 @@ def stats_dataframe(spark: SparkSession, entries: list[FileEntry]) -> DataFrame:
         (e.path, e.record_count, e.file_size_bytes, e.sequence_number, json.dumps(e.stats))
         for e in entries
     ]
-    return spark.createDataFrame(
-        rows, "path string, record_count long, file_size_bytes long, sequence_number long, stats_json string"
+    return local_frame(
+        spark, rows, "path string, record_count long, file_size_bytes long, sequence_number long, stats_json string"
     )

@@ -3,9 +3,10 @@ visible in the executed plan, so assert them — column pruning reaches the
 parquet scan (ReadSchema), range predicates land as PushedFilters (row-group
 pruning inside surviving files), scans stay inside WholeStageCodegen, and
 the MERGE probe broadcasts the CDC key side instead of shuffling the table.
-Reads and DV writes run no Python worker, building a read launches no Spark
-job, planning over JSON manifests and DataSource partitioning launch none,
-and a micro-MERGE's job count is pinned."""
+Reads (with DVs or equality deletes), DV writes and delete maintenance run
+no Python worker, building a read launches no Spark job, empty reads and
+planning over JSON manifests and DataSource partitioning launch none, and a
+micro-MERGE's job count is pinned."""
 
 import contextlib
 import io
@@ -15,9 +16,17 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.cdc import CdcScheduleGenerator, spec_to_spark, to_spark
 from moonlink_spark.datagen import generate_images
+from moonlink_spark.operators.compact import (
+    FULL,
+    compact,
+    rewrite_equality_deletes,
+    rewrite_position_deletes,
+)
+from moonlink_spark.operators.manifest_rewrite import rewrite_manifests
 from moonlink_spark.operators.merge import merge_cdc_batch
 from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.catalog import create_table
+from moonlink_spark.table.format import EQ_DELETES
 from moonlink_spark.table.planning import plan_data_candidates, plannable
 from moonlink_spark.table.scan import scan, scan_range, scan_values
 from moonlink_spark.table.writer import (
@@ -120,6 +129,9 @@ _PYTHON_NODES = (
     "FlatMapGroupsInPandas",
     "ArrowEvalPython",
     "BatchEvalPython",
+    # a `Scan ExistingRDD` is a frame built from a Python row list: pickled
+    # rows that a Python worker decodes (session.local_frame avoids it)
+    "ExistingRDD",
 )
 
 
@@ -153,13 +165,13 @@ def _with_dvs(spark, tmp_path):
     merge_cdc_batch(spark, t, to_spark(spark, gen.next_batch(0, 30, 20)), gen.commit_lsn)
     t.refresh()
     assert t.delete_entries()
-    return t
+    return t, gen
 
 
 def test_dv_scan_runs_no_python(spark, tmp_path):
     """A scan over deletion vectors expands them in the JVM: the anti-join
     is there, and no Python exec node is in any executed plan."""
-    t = _with_dvs(spark, tmp_path)
+    t, _ = _with_dvs(spark, tmp_path)
     df = scan(spark, t)
     plans = _executed_plans(spark, df.collect)
     assert any("LeftAnti" in p for p in plans), plans
@@ -168,7 +180,7 @@ def test_dv_scan_runs_no_python(spark, tmp_path):
 
 def test_dv_write_runs_no_python(spark, tmp_path):
     """Packing (file_path, pos) rows into v2c bitmaps runs in the JVM."""
-    t = _with_dvs(spark, tmp_path)
+    t, _ = _with_dvs(spark, tmp_path)
     dels = scan(spark, t, with_pos=True).limit(40).select(
         F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
     )
@@ -176,6 +188,58 @@ def test_dv_write_runs_no_python(spark, tmp_path):
     plans = _executed_plans(spark, lambda: write_delete_files(spark, dels, out))
     assert any("HashAggregate" in p for p in plans)
     _assert_no_python(plans)
+
+
+def _with_eq_deletes(spark, tmp_path):
+    """The _mk table after one eager MERGE (deletion vectors) and one lazy
+    MERGE (equality deletes)."""
+    t, gen = _with_dvs(spark, tmp_path)
+    _lazy_merge(spark, t, gen)
+    return t, gen
+
+
+def _lazy_merge(spark, t, gen):
+    b = gen.next_batch(0, 30, 10)
+    merge_cdc_batch(spark, t, to_spark(spark, b), gen.commit_lsn, mode="lazy")
+    t.refresh()
+    assert t.entries(content=EQ_DELETES)
+
+
+def test_eq_delete_reads_run_no_python(spark, tmp_path):
+    """Reads over equality deletes stamp each row with its data file's
+    sequence number from a LocalRelation, not from pickled Python rows:
+    scan, scan_values and scan_range run no Python worker."""
+    t, _ = _with_eq_deletes(spark, tmp_path)
+    ids = [f"img{i:012d}" for i in range(0, 400, 23)]
+    for df in (
+        scan(spark, t),
+        scan_values(spark, t, "image_id", ids),
+        scan_range(spark, t, "image_id", ids[0], ids[-1]),
+    ):
+        plans = _executed_plans(spark, df.collect)
+        assert any("LeftAnti" in p for p in plans), plans
+        _assert_no_python(plans)
+
+
+def test_delete_maintenance_runs_no_pickled_rows(spark, tmp_path):
+    """Compaction over equality deletes and DVs, both delete rewrites and a
+    manifest rewrite with a delete sweep build their path sets as
+    LocalRelations. Only ExistingRDD is asserted: bloom building keeps its
+    mapInPandas."""
+    t, gen = _with_eq_deletes(spark, tmp_path)
+    steps = [
+        lambda: rewrite_position_deletes(spark, t, min_files=1),
+        lambda: rewrite_manifests(spark, t, sweep_deletes=True, min_manifests=1),
+        lambda: compact(spark, t, mode=FULL, target_bytes=1 << 30),
+        lambda: _lazy_merge(spark, t, gen),
+        lambda: rewrite_equality_deletes(spark, t),
+    ]
+    for step in steps:
+        out = []
+        plans = _executed_plans(spark, lambda: out.append(step()))
+        assert plans and not getattr(out[0], "skipped", False)
+        hit = [p for p in plans if "ExistingRDD" in p]
+        assert not hit, hit
 
 
 def _jobs(spark) -> int:
@@ -230,6 +294,24 @@ def test_building_reads_launches_no_jobs(spark, tmp_path):
     scan(spark, t, columns=["image_id"], with_pos=True)
     scan_values(spark, t, "image_id", [f"img{i:012d}" for i in range(0, 800, 100)])
     assert _jobs(spark) == j0
+
+
+def test_empty_reads_launch_no_jobs(spark, tmp_path):
+    """A read over no files is a LocalRelation with the declared schema
+    (scan columns plus __file/__pos when asked): no Spark job."""
+    t, _ = _mk(spark, tmp_path)
+    cols = [f.name for f in t.schema.fields]
+    j0 = _jobs(spark)
+    vals = scan_values(spark, t, "image_id", [])
+    pos = scan(spark, t, data_entries=[], with_pos=True)
+    assert vals.collect() == [] and pos.collect() == []
+    assert _jobs(spark) == j0
+    assert vals.schema.fieldNames() == cols
+    assert pos.schema.fieldNames() == cols + ["__file", "__pos"]
+    assert [f.dataType.simpleString() for f in pos.schema.fields[-2:]] == [
+        "string",
+        "bigint",
+    ]
 
 
 def test_json_manifest_planning_launches_no_jobs(spark, tmp_path):
