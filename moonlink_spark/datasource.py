@@ -23,7 +23,12 @@ Design:
   applies its file's deletion vectors (packed-bitmap DV2/DV2C with crc
   verification, legacy v1 rows), equality-delete key sets under the
   strictly-older sequence rule, and field-id/name column resolution with
-  widening casts — byte-identical semantics to ``table.scan.scan``.
+  widening casts — byte-identical semantics to ``table.scan.scan``, at a
+  plain and a ``file://`` location alike. This application stays
+  executor-side because the Python DataSource API produces rows in Python;
+  it shares scan's identity guard (``check_eq_identity``) and the one
+  data-file path rule (``table.format.norm_path``) that matches delete
+  files to data files.
 - **Streaming is the changelog.** ``readStream`` consumes LSN offsets:
   each micro-batch replays ``(start, end]`` commits as insert events (rows
   of files added by data-changing commits) and delete events (DV
@@ -51,11 +56,12 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
     InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from moonlink_spark.table.format import norm_path
 
 FORMAT_NAME = "moonlink"
 CHANGE_TYPE_COL = "_change_type"
@@ -98,10 +104,6 @@ GROUP_TARGET_BYTES = 128 * 1024 * 1024
 # ------------------------------------------------------------ executor side
 
 
-def _norm(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
 def _dv_positions(dv_files: list, target: str):
     """Deleted positions for ``target`` across DV files — executor-side
     analog of table/dv.py's expansion (same framing + crc checks)."""
@@ -110,7 +112,7 @@ def _dv_positions(dv_files: list, target: str):
     from moonlink_spark.table.dv import DV2, DV2C, _unframe
     from moonlink_spark.table.stats import _open_footer
 
-    tgt = _norm(target)
+    tgt = norm_path(target)
     out = []
     for path, fmt in dv_files:
         pf, _ = _open_footer(path)
@@ -119,7 +121,7 @@ def _dv_positions(dv_files: list, target: str):
             fps = t.column("file_path").to_pylist()
             bms = t.column("bitmap").to_pylist()
             for fp, bm in zip(fps, bms):
-                if _norm(fp) != tgt:
+                if norm_path(fp) != tgt:
                     continue
                 bits = _unframe(bytes(bm), fp) if fmt == DV2C else bytes(bm)
                 arr = np.frombuffer(bits, dtype=np.uint8)
@@ -129,7 +131,7 @@ def _dv_positions(dv_files: list, target: str):
             pos = t.column("pos").to_pylist()
             out.append(
                 np.asarray(
-                    [p for fp, p in zip(fps, pos) if _norm(fp) == tgt],
+                    [p for fp, p in zip(fps, pos) if norm_path(fp) == tgt],
                     dtype=np.int64,
                 )
             )
@@ -267,7 +269,7 @@ def _read_partition(p: MoonlinkPartition):
             import pyarrow.dataset as pads
 
             try:
-                t = pads.dataset(_norm(p.data_path)).to_table(
+                t = pads.dataset(norm_path(p.data_path)).to_table(
                     filter=rg_filter, columns=read_cols or None
                 )
             except (pa.ArrowInvalid, pa.ArrowNotImplementedError, TypeError):
@@ -332,24 +334,6 @@ def _read_partition(p: MoonlinkPartition):
 
 
 # -------------------------------------------------------------- driver side
-
-
-def _check_eq_identity(eq_entries, identity: list) -> None:
-    """Mirror table/scan.py's EQ_KEYS_STAT guard on the datasource plane:
-    an equality-delete file written over a DIFFERENT identity than the
-    table currently declares must raise, never silently anti-join on the
-    wrong keys (scan.py:196-203 is the engine-side twin)."""
-    from moonlink_spark.table.writer import EQ_KEYS_STAT
-
-    for e in eq_entries:
-        wrote = e.stats.get(EQ_KEYS_STAT, "")
-        if wrote and wrote.split(",") != list(identity):
-            raise ValueError(
-                f"eq-delete file {e.path} was written over identity "
-                f"[{wrote}] but the table now declares {list(identity)}; "
-                "re-declare the identity only after compacting eq-deletes "
-                "away"
-            )
 
 
 def _load(options):
@@ -430,6 +414,7 @@ def _group(members: list) -> "MoonlinkPartition":
 class MoonlinkBatchReader(DataSourceReader):
     def __init__(self, options):
         from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES
+        from moonlink_spark.table.scan import check_eq_identity
 
         t = _load(options)
         snap_id = None
@@ -447,7 +432,7 @@ class MoonlinkBatchReader(DataSourceReader):
             for e in t.entries(snap_id, DELETES)
         ]
         eq_entries = t.entries(snap_id, EQ_DELETES)
-        _check_eq_identity(eq_entries, identity)
+        check_eq_identity(eq_entries, identity)
         eqs = [(e.path, e.sequence_number) for e in eq_entries]
         project = None
         if options.get("columns"):
@@ -612,6 +597,7 @@ def _changelog_partitions(
     stream source and the batch CDC-window reader. Pure metadata."""
     from moonlink_spark.table.changelog import _changed_snapshots, _is_replace
     from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES
+    from moonlink_spark.table.scan import check_eq_identity
 
     if hi <= lo:
         return []
@@ -666,7 +652,7 @@ def _changelog_partitions(
                         )
                     )
         if added_eqs:
-            _check_eq_identity(added_eqs, identity)
+            check_eq_identity(added_eqs, identity)
             if eq_mode != "keys":
                 raise ValueError(
                     "moonlink cdc read: window contains a lazy-MERGE "

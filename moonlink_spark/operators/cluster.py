@@ -36,7 +36,7 @@ from moonlink_spark.operators.compact import (
     removable_eq_delete_files,
 )
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import FileEntry, Snapshot
+from moonlink_spark.table.format import FileEntry, Snapshot, norm_path
 from moonlink_spark.table.scan import scan
 from moonlink_spark.table.writer import COMPACT_TARGET_BYTES, write_data_files
 
@@ -89,7 +89,7 @@ def cluster(
 
     del_counts = _delete_counts(spark, table)
     live_bytes = sum(
-        int(e.file_size_bytes * (1.0 - del_counts.get(e.path, 0) / max(e.record_count, 1)))
+        int(e.file_size_bytes * (1.0 - del_counts.get(norm_path(e.path), 0) / max(e.record_count, 1)))
         for e in entries
     )
     bins = max(1, math.ceil(live_bytes / target_bytes))

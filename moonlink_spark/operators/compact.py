@@ -48,9 +48,9 @@ from pyspark.sql import functions as F
 from moonlink_spark.checkpoint import JobCheckpoint
 from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import EQ_DELETES, FileEntry, Snapshot
+from moonlink_spark.table.format import EQ_DELETES, FileEntry, Snapshot, norm_path
 from moonlink_spark.table.io import accessor_for
-from moonlink_spark.table.scan import scan
+from moonlink_spark.table.scan import _norm_path, scan
 from moonlink_spark.table.stats import collect_file_entries
 from moonlink_spark.table.writer import (
     COMPACT_TARGET_BYTES,
@@ -100,7 +100,8 @@ def _delete_counts_df(spark: SparkSession, table: Table):
     positions across delete files. Never collected whole: the distributed
     planner joins it against the manifests (planning.py), and the driver
     only pulls counts for files it has already selected. None when the
-    snapshot has no deletes."""
+    snapshot has no deletes. ``file_path`` is the normalized path
+    (format.norm_path): look manifest entries up by ``norm_path(e.path)``."""
     from moonlink_spark.table.dv import read_delete_positions
 
     df = read_delete_positions(spark, table.delete_entries())
@@ -157,7 +158,7 @@ def rewrite_position_deletes(
         return RewriteDeletesResult(None, len(dels), len(dels), 0, skipped=True)
     pos = read_delete_positions(spark, dels)
     live = local_frame(
-        spark, {"lp": [e.path for e in table.data_entries()]}, "lp string"
+        spark, {"lp": [norm_path(e.path) for e in table.data_entries()]}, "lp string"
     )
     kept = pos.join(
         F.broadcast(live), pos["file_path"] == live["lp"], "left_semi"
@@ -211,10 +212,12 @@ def rewrite_equality_deletes(
     new deletes/upserts would change the match set — serialized via
     conflict_on_operations, like any mutating batch.
     """
+    from moonlink_spark.schema import table_identity
     from moonlink_spark.table.scan import (
         FILE_COL,
         POS_COL,
         attach_data_seq,
+        check_eq_identity,
         eq_delete_frame,
         eq_match_cond,
         scan,
@@ -224,7 +227,9 @@ def rewrite_equality_deletes(
     eqs = table.entries(content=EQ_DELETES)
     if len(eqs) < min_files:
         return RewriteDeletesResult(None, len(eqs), len(eqs), 0, skipped=True)
-    eq, keys = eq_delete_frame(spark, table, eqs)
+    keys = table_identity(table)
+    check_eq_identity(eqs, keys)
+    eq = eq_delete_frame(spark, table.schema, keys, eqs)
     data = table.data_entries()
     # rows NOT yet DV-deleted, eq rule NOT applied (we're materializing it);
     # column-pruned to the identity keys — payload bytes never read
@@ -280,6 +285,8 @@ def removable_delete_files(
     dels = table.delete_entries()
     if not dels:
         return set()
+    # delete files record normalized data-file paths (format.norm_path)
+    removed_paths = {norm_path(p) for p in removed_data_paths}
     driver_ok = len(dels) <= _DRIVER_DELETE_SCAN_FILES and all(
         e.stats.get("format") in ("dv2", "dv2c")
         or e.record_count <= _DRIVER_DELETE_SCAN_ROWS
@@ -294,7 +301,7 @@ def removable_delete_files(
             pf, _ = _open_footer(e.path)
             col = pf.read(columns=["file_path"]).column("file_path")
             refs = set(col.to_pylist())
-            return bool(refs) and refs <= removed_data_paths
+            return bool(refs) and refs <= removed_paths
 
         with ThreadPoolExecutor(max_workers=min(16, len(dels))) as ex:
             flags = list(ex.map(all_dangling, dels))
@@ -302,19 +309,17 @@ def removable_delete_files(
     # only file_path is needed (one row per referenced data file in DV v2;
     # one per position in v1) — schema-projected read covers both formats
     ddf = spark.read.schema("file_path string").parquet(*[e.path for e in dels])
-    removed = F.broadcast(
-        local_frame(spark, {"rp": removed_data_paths}, "rp string")
-    )
+    removed = F.broadcast(local_frame(spark, {"rp": removed_paths}, "rp string"))
     refs = (
-        ddf.withColumn("src", F.input_file_name())
-        .withColumn("src", F.regexp_replace("src", r"^file:/+", "/"))
+        ddf.withColumn("src", _norm_path(F.input_file_name()))
         .join(removed, F.col("file_path") == F.col("rp"), "left")
         .groupBy("src")
         .agg(F.min(F.col("rp").isNotNull().cast("int")).alias("all_removed"))
         .filter(F.col("all_removed") == 1)
         .collect()
     )
-    return {r["src"] for r in refs}
+    srcs = {r["src"] for r in refs}
+    return {e.path for e in dels if norm_path(e.path) in srcs}
 
 
 def removable_eq_delete_files(
@@ -356,7 +361,7 @@ def removable_eq_delete_files(
 
 
 def _live_bytes(e: FileEntry, del_counts: dict[str, int]) -> int:
-    live_frac = 1.0 - (del_counts.get(e.path, 0) / max(e.record_count, 1))
+    live_frac = 1.0 - (del_counts.get(norm_path(e.path), 0) / max(e.record_count, 1))
     return int(e.file_size_bytes * live_frac)
 
 
@@ -385,7 +390,7 @@ def select_candidates(
             e
             for e in data
             if e.file_size_bytes < target_bytes
-            or del_counts.get(e.path, 0) > 0
+            or del_counts.get(norm_path(e.path), 0) > 0
             or unindexed(e)
         ]
         # a lone unbucketed file is still worth rewriting: bucketizing it
@@ -399,7 +404,7 @@ def select_candidates(
         for e in data
         if e.file_size_bytes < target_bytes
         or unindexed(e)
-        or (e.record_count and del_counts.get(e.path, 0) / e.record_count >= delete_ratio)
+        or (e.record_count and del_counts.get(norm_path(e.path), 0) / e.record_count >= delete_ratio)
     ]
     # (size, path) is a total order — keeps the selection identical to the
     # distributed planner (planning.plan_compaction_candidates) on ties
@@ -512,7 +517,7 @@ def compact(
             # selected files — O(selected) driver, pulled via a semi join
             del_counts: dict[str, int] = {}
             if selected and dc_df is not None:
-                sel = local_frame(spark, {"p": [e.path for e in selected]}, "p string")
+                sel = local_frame(spark, {"p": [norm_path(e.path) for e in selected]}, "p string")
                 del_counts = {
                     r["file_path"]: r["n"]
                     for r in dc_df.join(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import DATA, DELETES, Snapshot
+from moonlink_spark.table.format import Snapshot, norm_path
 from moonlink_spark.table.writer import write_delete_files
 
 
@@ -56,7 +56,7 @@ def rewrite_manifests(
     if sweep_deletes and delete_entries:
         from moonlink_spark.table.dv import read_delete_positions
 
-        live_paths = {e.path for e in data_entries}
+        live_paths = {norm_path(e.path) for e in data_entries}
         ddf = read_delete_positions(spark, delete_entries)
         live_df = local_frame(spark, {"file_path": live_paths}, "file_path string")
         # no dropDuplicates needed: the DV repack (write_delete_files →

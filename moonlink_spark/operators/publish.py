@@ -22,28 +22,29 @@ public Iceberg table spec:
   ``equality_ids`` manifest metadata; the strictly-lower sequence rule is
   the same in both formats, so semantics carry over unchanged
 
-:func:`read_published` is the check-side: it plans a scan purely from the
+:func:`read_published` is the check-side: it plans purely from the
 PUBLISHED Iceberg metadata (version-hint → metadata.json → manifest list →
-manifests, all parsed back from bytes) and reproduces the table content
-with Spark — no engine metadata touched. tests/test_iceberg_publish.py
-additionally re-reads the Avro with an independently written from-spec
-decoder and replays the delete semantics in DuckDB directly over the
-published parquet (the external-engine evidence this sandbox can produce;
-the DuckDB iceberg extension itself cannot be installed offline).
+manifests, all parsed back from bytes), maps the manifest entries to the
+engine's ``FileEntry`` and reads them through the same delete-application
+core as every engine scan (``table.scan.read_files``) — no engine metadata
+touched, and no second implementation of the v2 delete rules.
+:func:`import_iceberg` materializes tables with live deletes through it.
+tests/test_iceberg_publish.py additionally re-reads the Avro with an
+independently written from-spec decoder and replays the delete semantics
+in DuckDB directly over the published parquet (external-engine evidence
+that needs no network; the DuckDB iceberg extension cannot be installed
+offline).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
-import re
 import struct
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -62,7 +63,14 @@ from pyspark.sql.types import (
 
 from moonlink_spark.table import avro
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES, FileEntry, now_ms
+from moonlink_spark.table.format import (
+    DATA,
+    DELETES,
+    EQ_DELETES,
+    FileEntry,
+    norm_path,
+    now_ms,
+)
 from moonlink_spark.table.io import accessor_for
 
 #: Iceberg reserved field ids for position-delete files (table spec)
@@ -378,7 +386,7 @@ def publish_iceberg(
                 f"publish_iceberg writes local files only; {what} {loc!r} "
                 "is not a local path or file:// URI"
             )
-    dest = re.sub(r"^file:/+", "/", dest)
+    dest = norm_path(dest)
     table.refresh()
     snap = table.head_snapshot(snapshot_id)
     if snap is None:
@@ -527,7 +535,6 @@ def publish_iceberg(
         [snap.sequence_number]
         + [r["sequence_number"] for r in data_records + delete_records]
     )
-    all_nested = json.dumps(schema_json)
     last_col = max(
         [int(n) for n in _collect_ids(schema_json)] or [max(name_to_id.values())]
     )
@@ -583,7 +590,6 @@ def publish_iceberg(
         "metadata-log": [],
         "statistics": [],
     }
-    assert all_nested  # schema serialized above; keep linters honest
     # re-publish increments the metadata version: vN+1.metadata.json is
     # written FIRST, then the version-hint flips atomically — a reader
     # following the hint always sees a complete metadata object
@@ -632,8 +638,7 @@ def _collect_ids(sch) -> list[int]:
 
 def _load_published(location: str) -> tuple[dict, list[dict], list[dict]]:
     """Parse published Iceberg metadata → (metadata.json, data entries,
-    delete entries). Entries are the raw manifest-entry dicts plus the
-    manifest content code under ``_manifest_content``."""
+    delete entries), the raw live manifest-entry dicts."""
     meta_dir = os.path.join(location, "metadata")
     with open(os.path.join(meta_dir, "version-hint.text")) as f:
         version = int(f.read().strip())
@@ -653,7 +658,6 @@ def _load_published(location: str) -> tuple[dict, list[dict], list[dict]]:
         for e in entries:
             if e["status"] == 2:  # DELETED entries are not live
                 continue
-            e["_manifest_content"] = mf["content"]
             (data if mf["content"] == 0 else deletes).append(e)
     return md, data, deletes
 
@@ -704,83 +708,43 @@ def _spark_type(t):
 
 def read_published(spark: SparkSession, location: str) -> DataFrame:
     """Scan a PUBLISHED Iceberg table from its own metadata only — the
-    in-sandbox stand-in for an external engine (planning driven entirely
-    by version-hint/metadata.json/Avro manifests; row data read by Spark's
-    parquet source; v2 delete semantics applied per the spec: position
-    deletes by (file_path, pos), equality deletes against data files with
-    strictly lower sequence numbers). Columns resolve by NAME (the
-    published ``schema.name-mapping.default``): data files may predate
+    in-process stand-in for an external engine. Planning reads only
+    version-hint/metadata.json/Avro manifests; their entries map to
+    ``FileEntry``s (position-delete files as v1 row files, ``equality_ids``
+    as each equality-delete file's key list) and the engine's one
+    delete-application core, ``table.scan.read_files``, reads them: the v2
+    rules are the ones every engine scan applies. Columns resolve by NAME
+    (the published ``schema.name-mapping.default``): data files may predate
     field-id stamping, and a mixed-history read must not fail."""
     from pyspark.sql.types import StructField
 
+    from moonlink_spark.table.scan import read_files
+    from moonlink_spark.table.writer import EQ_KEYS_STAT
+
     md, data_entries, delete_entries = _load_published(location)
     fields = _current_schema(md)["fields"]
-    cols = [f["name"] for f in fields]
-    if not data_entries:
-        raise ValueError("published table has no data files")
-    read_schema = StructType(
-        [
-            StructField(f["name"], _spark_type(f["type"]), True)
-            for f in fields
-        ]
+    id_to_name = {f["id"]: f["name"] for f in fields}
+    schema = StructType(
+        [StructField(f["name"], _spark_type(f["type"]), True) for f in fields]
     )
 
-    from moonlink_spark.table.scan import _norm_path
-
-    df = (
-        spark.read.schema(read_schema)
-        .parquet(*[e["data_file"]["file_path"] for e in data_entries])
-        .select(
-            "*",
-            _norm_path(F.col("_metadata.file_path")).alias("__path"),
-            F.col("_metadata.row_index").alias("__pos"),
+    def entry(e: dict, content: str, stats: dict | None = None) -> FileEntry:
+        f = e["data_file"]
+        return FileEntry(
+            content, f["file_path"], f["record_count"],
+            f["file_size_in_bytes"], e["sequence_number"], stats or {},
         )
-    )
-    pos_files = [
-        e["data_file"]["file_path"]
+
+    pos = [entry(e, DELETES) for e in delete_entries if e["data_file"]["content"] == 1]
+    eqs = [
+        entry(e, EQ_DELETES, {EQ_KEYS_STAT: ",".join(
+            id_to_name[i] for i in e["data_file"]["equality_ids"]
+        )})
         for e in delete_entries
-        if e["data_file"]["content"] == 1
+        if e["data_file"]["content"] == 2
     ]
-    if pos_files:
-        dels = spark.read.parquet(*pos_files).select(
-            _norm_path(F.col("file_path")).alias("__dpath"),
-            F.col("pos").alias("__dpos"),
-        )
-        df = df.join(
-            F.broadcast(dels),
-            (df["__path"] == dels["__dpath"]) & (df["__pos"] == dels["__dpos"]),
-            "left_anti",
-        )
-    eq_entries = [e for e in delete_entries if e["data_file"]["content"] == 2]
-    if eq_entries:
-        id_to_name = {f["id"]: f["name"] for f in fields}
-        seq_by_path = {
-            e["data_file"]["file_path"]: e["sequence_number"]
-            for e in data_entries
-        }
-        path_seq = F.create_map(
-            *[
-                x
-                for p, s in seq_by_path.items()
-                for x in (_norm_path(F.lit(p)), F.lit(int(s)))
-            ]
-        )
-        df = df.withColumn("__dseq", path_seq[F.col("__path")])
-        for e in eq_entries:
-            keys = [id_to_name[i] for i in e["data_file"]["equality_ids"]]
-            kdf = (
-                spark.read.parquet(e["data_file"]["file_path"])
-                .select(*keys)
-                .distinct()
-                .withColumn("__eq", F.lit(True))
-            )
-            joined = df.join(F.broadcast(kdf), keys, "left")
-            df = joined.filter(
-                F.col("__eq").isNull()
-                | (F.col("__dseq") >= F.lit(int(e["sequence_number"])))
-            ).drop("__eq")
-        df = df.drop("__dseq")
-    return df.select(*cols)
+    data = [entry(e, DATA) for e in data_entries]
+    return read_files(spark, schema, [], data, pos, eqs)
 
 
 # ----------------------------------------------------------------- import

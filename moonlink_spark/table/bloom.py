@@ -55,7 +55,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark.session import local_frame
-from moonlink_spark.table.format import FileEntry
+from moonlink_spark.table.format import FileEntry, norm_path
 from moonlink_spark.table.io import accessor_for
 
 BLOOM_STAT = "__key_bloom"
@@ -114,6 +114,7 @@ def attach_key_blooms(
     given files — batch per COMMIT, never per bin; mutates and returns
     ``entries``."""
     from moonlink_spark.schema import normalize_keys
+    from moonlink_spark.table.scan import _norm_path
 
     if not entries:
         return entries
@@ -122,12 +123,18 @@ def attach_key_blooms(
         spark.read.parquet(*[e.path for e in entries])
         .select(
             F.xxhash64(*key_cols).alias("h"),
-            F.regexp_replace(F.col("_metadata.file_path"), r"^file:/+", "/").alias("f"),
+            _norm_path(F.col("_metadata.file_path")).alias("f"),
         )
     )
     rows = hashes.groupBy("f").applyInPandas(_pack, schema=_PACK_SCHEMA).collect()
-    blooms = {
+    by_norm = {
         r["f"]: {"m": r["m"], "k": r["k"], "bits": bytes(r["bits"])} for r in rows
+    }
+    # keyed by the manifest path, which is what every lookup has in hand
+    blooms = {
+        e.path: by_norm[norm_path(e.path)]
+        for e in entries
+        if norm_path(e.path) in by_norm
     }
     if not blooms:
         return entries

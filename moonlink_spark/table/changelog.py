@@ -39,7 +39,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.dv import read_delete_positions
-from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES, Snapshot
+from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES, Snapshot, norm_path
 from moonlink_spark.table.scan import FILE_COL, POS_COL, scan
 
 CHANGE_TYPE_COL = "_change_type"
@@ -183,7 +183,7 @@ def scan_changes(
                 e
                 for e in table.entries(s.snapshot_id, DATA)
                 if e.sequence_number < s.sequence_number
-                and _norm(e.path) in ref_paths
+                and norm_path(e.path) in ref_paths
             ]
             if parent_refs:
                 # old DVs need not be anti-applied: MERGE probes only LIVE
@@ -288,11 +288,3 @@ def scan_changes(
     for p in parts[1:]:
         df = df.unionByName(p)
     return df
-
-
-def _norm(path: str) -> str:
-    # DV file_path values are normalized from Spark's _metadata.file_path
-    # (file:/... -> /...); manifest entry paths are already plain
-    if path.startswith("file:"):
-        return "/" + path.split(":", 1)[1].lstrip("/")
-    return path

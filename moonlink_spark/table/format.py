@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
@@ -54,6 +55,18 @@ DELETES = "deletes"
 # resolving them later (mooncake_table.rs:1160-1184 delete-by-lookup,
 # resolved at snapshot time). Written by lazy MERGE; folded by compaction.
 EQ_DELETES = "eq-deletes"
+
+# The one rule for which string names a data file: Spark reports
+# ``_metadata.file_path`` as ``file:/a`` and delete files record ``/a``, while
+# a ``file://`` table's manifests keep ``file:///a``. Every comparison of a
+# path read from a file with a manifest path goes through it (Column form:
+# table/scan.py ``_norm_path``).
+FILE_SCHEME_RE = r"^file:/+"
+
+
+def norm_path(path: str) -> str:
+    """``file:/a``, ``file:///a`` -> ``/a``; any other path unchanged."""
+    return re.sub(FILE_SCHEME_RE, "/", path)
 
 
 @dataclass

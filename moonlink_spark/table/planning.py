@@ -235,7 +235,9 @@ def plan_compaction_candidates(
         dc = del_counts_df.select(
             F.col("file_path").alias("dpath"), F.col("n").alias("dn")
         )
-        df = df.join(dc, F.col("path") == F.col("dpath"), "left").drop("dpath")
+        from moonlink_spark.table.scan import _norm_path
+
+        df = df.join(dc, _norm_path(F.col("path")) == F.col("dpath"), "left").drop("dpath")
     else:
         df = df.withColumn("dn", F.lit(None).cast("long"))
     dn = F.coalesce(F.col("dn"), F.lit(0))

@@ -16,11 +16,17 @@ small (the common case — compaction keeps deleted% < 50,
 reference: src/moonlink/src/storage/compaction/compaction_config.rs:47-54),
 else AQE picks a shuffle join.
 
-Equality deletes anti-join on the identity key under the sequence rule: each
+Equality deletes anti-join on their key columns under the sequence rule: each
 row is stamped with its data file's sequence number from a driver-built
 (path -> seq) map. That map, and the empty scan, reach Spark as Arrow
 ``LocalRelation``s (session.local_frame), so no read runs a Python worker —
 no per-row work on delete application, as in the reference's read path.
+
+One core, :func:`read_files`, applies all of this to file entries; scan()
+and the published-Iceberg reader (operators/publish.read_published) both
+call it. A row is ``(__file, __pos)``, ``__file`` normalized by the one path
+rule (table/format.norm_path, Column form ``_norm_path``), so delete files
+match their data files at plain and ``file://`` locations alike.
 
 File pruning: per-file min/max bounds from manifests prune data files before
 the scan starts (the moonlink GlobalIndex's job — locate keys without reading
@@ -37,10 +43,12 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import FileEntry
+from moonlink_spark.table.format import EQ_DELETES, FILE_SCHEME_RE, FileEntry
+from moonlink_spark.table.writer import EQ_KEYS_STAT
 
 FILE_COL = "__file"
 POS_COL = "__pos"
+_DSEQ_COL = "__dseq"
 
 # Broadcast hash relations store the path STRING per row (no dict encoding):
 # ~(100B path + 8B pos + hash-table overhead) ≈ 300B/row, so 1M rows ≈ 300MB
@@ -51,7 +59,8 @@ _BROADCAST_DELETE_ROWS = 1_000_000
 
 
 def _norm_path(col: Column) -> Column:
-    return F.regexp_replace(col, r"^file:/+", "/")
+    """Column form of table/format.norm_path."""
+    return F.regexp_replace(col, FILE_SCHEME_RE, "/")
 
 
 def scan(
@@ -74,32 +83,57 @@ def scan(
     the delete set the same way (changelog insert reads pass [] because a
     commit's new files cannot be referenced by its own DVs).
     """
+    from moonlink_spark.schema import table_identity
+
     if ref is not None:
         from moonlink_spark.table.refs import resolve_ref
 
         if snapshot_id is not None:
             raise ValueError("pass either snapshot_id or ref, not both")
         snapshot_id = resolve_ref(table, ref)
-    schema = table.schema
     entries = data_entries if data_entries is not None else table.data_entries(snapshot_id)
     if delete_entries is None:
         delete_entries = table.delete_entries(snapshot_id)
     if eq_delete_entries is None:
-        from moonlink_spark.table.format import EQ_DELETES
-
         eq_delete_entries = table.entries(snapshot_id, EQ_DELETES)
+    identity = table_identity(table)
+    check_eq_identity(eq_delete_entries, identity)
+    return read_files(
+        spark, table.schema, identity, entries, delete_entries,
+        eq_delete_entries, columns, with_pos,
+    )
 
+
+def read_files(
+    spark: SparkSession,
+    schema: StructType,
+    identity: list[str],
+    data: list[FileEntry],
+    pos_deletes: list[FileEntry],
+    eq_deletes: list[FileEntry],
+    columns: list[str] | None = None,
+    with_pos: bool = False,
+) -> DataFrame:
+    """The delete-application core: the rows of ``data`` read under
+    ``schema``, minus the (file, position) pairs ``pos_deletes`` name, minus
+    the rows ``eq_deletes`` name by key under the Iceberg v2 sequence rule.
+    Each equality-delete file applies by its own key list (``EQ_KEYS_STAT``;
+    ``identity`` when it records none); files are grouped by key list, then
+    by sequence number. ``with_pos`` keeps ``__file``/``__pos``."""
     out_cols = columns or [f.name for f in schema.fields]
-    # eq-delete application joins on the identity key columns — a projection
-    # that excludes them still needs them READ (then dropped post-join), or
-    # the anti-join condition would reference missing columns
-    eq_extra: list[str] = []
-    if eq_delete_entries:
-        from moonlink_spark.schema import table_identity
+    eq_groups: dict[str, list[FileEntry]] = {}
+    for e in eq_deletes:
+        keys = e.stats.get(EQ_KEYS_STAT) or ",".join(identity)
+        eq_groups.setdefault(keys, []).append(e)
+    # eq-delete application joins on the key columns — a projection that
+    # excludes them still needs them READ (then dropped post-join), or the
+    # anti-join condition would reference missing columns
+    eq_extra = [
+        k for k in dict.fromkeys(k for ks in eq_groups for k in ks.split(","))
+        if k not in out_cols
+    ]
 
-        eq_extra = [k for k in table_identity(table) if k not in out_cols]
-
-    if not entries:
+    if not data:
         empty_schema = StructType(
             [f for f in schema.fields if f.name in out_cols]
             + ([StructField(FILE_COL, StringType()), StructField(POS_COL, LongType())] if with_pos else [])
@@ -136,8 +170,8 @@ def scan(
         # one documented conf this engine needs) rather than toggled per scan.
         if spark.conf.get("spark.sql.parquet.fieldId.read.enabled", "false") != "true":
             spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        with_ids = [e for e in entries if not e.stats.get(NO_FIELD_IDS_STAT)]
-        without_ids = [e for e in entries if e.stats.get(NO_FIELD_IDS_STAT)]
+        with_ids = [e for e in data if not e.stats.get(NO_FIELD_IDS_STAT)]
+        without_ids = [e for e in data if e.stats.get(NO_FIELD_IDS_STAT)]
         parts = []
         if with_ids:
             parts.append(_read(schema, with_ids))
@@ -147,63 +181,66 @@ def scan(
         for part in parts[1:]:
             df = df.unionByName(part)
     else:
-        df = _read(schema, entries)
+        df = _read(schema, data)
 
-    if delete_entries:
+    if pos_deletes:
         from moonlink_spark.table.dv import read_delete_positions
 
-        n_del = sum(e.record_count for e in delete_entries)
+        n_del = sum(e.record_count for e in pos_deletes)
         # DV bitmaps expand to (file,pos) rows lazily, executor-side, and
         # only feed this anti-join — delete metadata is tiny vs row data
-        dels = read_delete_positions(spark, delete_entries)
-        cond = (df[FILE_COL] == dels["file_path"]) & (df[POS_COL] == dels["pos"])
+        dels = read_delete_positions(spark, pos_deletes)
+        cond = (df[FILE_COL] == _norm_path(dels["file_path"])) & (df[POS_COL] == dels["pos"])
         if n_del <= _BROADCAST_DELETE_ROWS:
             dels = F.broadcast(dels)
         df = df.join(dels, cond, "left_anti")
 
-    if eq_delete_entries:
-        df = _apply_eq_deletes(spark, table, df, entries, eq_delete_entries)
-    if eq_extra:
-        df = df.drop(*eq_extra)
+    if eq_groups:
+        # both join sides are metadata-scale: the per-data-file seq map and
+        # the delete keys broadcast below the usual ceiling
+        df = attach_data_seq(spark, df, data)
+        for keys, group in eq_groups.items():
+            key_list = keys.split(",")
+            eq = eq_delete_frame(spark, schema, key_list, group)
+            df = df.join(eq, eq_match_cond(df, key_list), "left_anti")
+        df = df.drop(_DSEQ_COL, *eq_extra)
 
     if not with_pos:
         df = df.drop(FILE_COL, POS_COL)
     return df
 
 
-_DSEQ_COL = "__dseq"
+def check_eq_identity(entries: list[FileEntry], keys: list[str]) -> None:
+    """Every equality-delete file must have been written over ``keys``, the
+    table's CURRENT identity: an identity re-declaration cannot silently
+    mis-apply old delete files. Shared by scan, eq-delete maintenance and
+    the DataSource planner."""
+    for e in entries:
+        wrote = e.stats.get(EQ_KEYS_STAT)
+        if wrote and wrote.split(",") != list(keys):
+            raise ValueError(
+                f"eq-delete file {e.path} was written over identity "
+                f"[{wrote}] but the table now declares {list(keys)}; "
+                "re-declare the identity only after compacting eq-deletes away"
+            )
 
 
 def eq_delete_frame(
-    spark: SparkSession, table: Table, eq_entries: list[FileEntry]
-) -> tuple[DataFrame, list[str]]:
-    """Equality-delete keys as one DataFrame with columns ``__eq_<key>...``
-    and ``__eseq`` (the delete file's sequence number), broadcast below the
-    usual ceiling. Validates that every eq file was written over the
-    table's CURRENT identity (the recorded key list must match) — an
-    identity re-declaration cannot silently mis-apply old delete files."""
-    from moonlink_spark.schema import table_identity
+    spark: SparkSession, schema: StructType, keys: list[str], entries: list[FileEntry]
+) -> DataFrame:
+    """Equality-delete keys of ``entries`` (all written over ``keys``) as one
+    DataFrame with columns ``__eq_<key>...`` and ``__eseq`` (the delete
+    file's sequence number), broadcast below the usual ceiling."""
     from moonlink_spark.table.fieldids import strip_field_ids
-    from moonlink_spark.table.writer import EQ_KEYS_STAT
 
-    keys = table_identity(table)
-    for e in eq_entries:
-        wrote = e.stats.get(EQ_KEYS_STAT, "")
-        if wrote and wrote.split(",") != keys:
-            raise ValueError(
-                f"eq-delete file {e.path} was written over identity "
-                f"[{wrote}] but the table now declares {keys}; re-declare "
-                "the identity only after compacting eq-deletes away"
-            )
     # eq files grouped by THEIR sequence number (few distinct commits alive
-    # at once — maintenance keeps it so); engine-written with exact key
-    # names and no field ids, so the name-resolved (id-stripped) read is
-    # the correct one
+    # at once — maintenance keeps it so); written with exact key names, so
+    # the name-resolved (id-stripped) read is the correct one
     by_seq: dict[int, list[FileEntry]] = {}
-    for e in eq_entries:
+    for e in entries:
         by_seq.setdefault(e.sequence_number, []).append(e)
     key_schema = strip_field_ids(
-        StructType([f for f in table.schema.fields if f.name in keys])
+        StructType([f for f in schema.fields if f.name in keys])
     )
     parts = []
     for s, group in sorted(by_seq.items()):
@@ -217,9 +254,9 @@ def eq_delete_frame(
     for p in parts[1:]:
         eq = eq.unionByName(p)
     eq = eq.select(*[F.col(k).alias(f"__eq_{k}") for k in keys], "__eseq")
-    if sum(e.record_count for e in eq_entries) <= _BROADCAST_DELETE_ROWS:
+    if sum(e.record_count for e in entries) <= _BROADCAST_DELETE_ROWS:
         eq = F.broadcast(eq)
-    return eq, keys
+    return eq
 
 
 def attach_data_seq(
@@ -249,23 +286,6 @@ def eq_match_cond(df: DataFrame, keys: list[str]) -> Column:
     for k in keys:
         cond = cond & (df[k] == F.col(f"__eq_{k}"))
     return cond & (F.col("__eseq") > F.col(_DSEQ_COL))
-
-
-def _apply_eq_deletes(
-    spark: SparkSession,
-    table: Table,
-    df: DataFrame,
-    data_entries: list[FileEntry],
-    eq_entries: list[FileEntry],
-) -> DataFrame:
-    """Anti-join the scan against equality-delete keys under the sequence
-    rule. Zero cost when the snapshot has no eq-delete files (maintenance
-    folds them and drops the entries). Both join sides are metadata-scale:
-    the per-data-file seq map and the delete keys broadcast below the
-    usual ceiling."""
-    eq, keys = eq_delete_frame(spark, table, eq_entries)
-    df = attach_data_seq(spark, df, data_entries)
-    return df.join(eq, eq_match_cond(df, keys), "left_anti").drop(_DSEQ_COL)
 
 
 def scan_at_lsn(spark: SparkSession, table: Table, lsn: int, **kw) -> DataFrame:
