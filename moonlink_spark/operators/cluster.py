@@ -30,13 +30,9 @@ from pyspark.sql.functions import pandas_udf
 
 from moonlink_spark.checkpoint import JobCheckpoint
 from moonlink_spark.functions.codes import sfc_code, zorder_expr
-from moonlink_spark.operators.compact import (
-    _delete_counts,
-    removable_delete_files,
-    removable_eq_delete_files,
-)
+from moonlink_spark.operators.compact import _delete_counts, _live_bytes
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import FileEntry, Snapshot, norm_path
+from moonlink_spark.table.format import EQ_DELETES, FileEntry, Snapshot
 from moonlink_spark.table.scan import scan
 from moonlink_spark.table.writer import COMPACT_TARGET_BYTES, write_data_files
 
@@ -88,13 +84,16 @@ def cluster(
         return ClusterResult(None, 0, 0, strategy, skipped=True)
 
     del_counts = _delete_counts(spark, table)
-    live_bytes = sum(
-        int(e.file_size_bytes * (1.0 - del_counts.get(norm_path(e.path), 0) / max(e.record_count, 1)))
-        for e in entries
-    )
+    live_bytes = sum(_live_bytes(e, del_counts) for e in entries)
     bins = max(1, math.ceil(live_bytes / target_bytes))
     bounds = [column_bounds(entries, c) for c in cols]
     sel_paths = {e.path for e in entries}
+    # the rewrite scans with every delete applied and replaces EVERY data
+    # file, so every delete file of this snapshot is dangling afterwards
+    # (rebucket_table's rule)
+    removable = {e.path for e in table.delete_entries()} | {
+        e.path for e in table.entries(content=EQ_DELETES)
+    }
 
     ckpt = (
         JobCheckpoint(checkpoint_root, f"cluster-{strategy}-snap{table.md.current_snapshot_id}")
@@ -143,10 +142,6 @@ def cluster(
 
         attach_key_blooms(spark, new_entries, table_bucket_key(table))
 
-    removable = removable_delete_files(spark, table, sel_paths)
-    # the rewrite scanned with eq-deletes applied and replaces EVERY data
-    # file, so eq files whose targets are all rewritten are dangling too
-    removable |= removable_eq_delete_files(spark, table, sel_paths)
     metrics = {
         "strategy": strategy,
         "cols": list(cols),

@@ -94,30 +94,46 @@ class CompactResult:
     metrics: dict | None = None
 
 
-def _delete_counts_df(spark: SparkSession, table: Table):
-    """Per-data-file deleted-row counts as a DATAFRAME (file_path, n) — DV
-    bitmaps expanded executor-side, countDistinct folds overlapping
-    positions across delete files. Never collected whole: the distributed
-    planner joins it against the manifests (planning.py), and the driver
-    only pulls counts for files it has already selected. None when the
-    snapshot has no deletes. ``file_path`` is the normalized path
-    (format.norm_path): look manifest entries up by ``norm_path(e.path)``."""
+def _delete_counts(spark: SparkSession, table: Table) -> dict[str, int]:
+    """Per-data-file deleted-row counts, keyed by the normalized path
+    (format.norm_path: look manifest entries up by ``norm_path(e.path)``).
+    DV bitmaps expand executor-side and countDistinct folds overlapping
+    positions across delete files; the driver receives one row per data
+    file that has deletes."""
     from moonlink_spark.table.dv import read_delete_positions
 
     df = read_delete_positions(spark, table.delete_entries())
     if df is None:
-        return None
-    return df.groupBy("file_path").agg(F.countDistinct("pos").alias("n"))
-
-
-def _delete_counts(spark: SparkSession, table: Table) -> dict[str, int]:
-    """Driver-side dict form of ``_delete_counts_df`` — for JSON-manifest
-    (small) tables and full-rewrite paths where the driver holds the file
-    list anyway."""
-    df = _delete_counts_df(spark, table)
-    if df is None:
         return {}
-    return {r["file_path"]: r["n"] for r in df.collect()}
+    agg = df.groupBy("file_path").agg(F.countDistinct("pos").alias("n"))
+    return {r["file_path"]: r["n"] for r in agg.collect()}
+
+
+def _repack_live_positions(
+    spark: SparkSession,
+    table: Table,
+    dels: list[FileEntry],
+    data: list[FileEntry],
+    num_files: int,
+) -> list[FileEntry]:
+    """Re-pack the positions of ``dels`` into ``num_files`` new DV files,
+    keeping only positions whose data file is in ``data``, the snapshot's
+    live data entries (a broadcast semi join on the normalized path).
+    Overlapping positions fold into one bitmap bit. Outputs with no position
+    left are not returned: a zero-row delete file would never be dropped
+    again. The caller sets the outputs' sequence rule and commits them."""
+    from moonlink_spark.table.dv import read_delete_positions
+
+    pos = read_delete_positions(spark, dels)
+    live = local_frame(spark, {"lp": [norm_path(e.path) for e in data]}, "lp string")
+    kept = pos.join(F.broadcast(live), pos["file_path"] == live["lp"], "left_semi")
+    return [
+        e
+        for e in write_delete_files(
+            spark, kept, table.new_delete_dir(), num_files=num_files
+        )
+        if e.record_count > 0
+    ]
 
 
 @dataclass
@@ -150,26 +166,13 @@ def rewrite_position_deletes(
     residue, snapshot_maintenance.rs:369-424) are dropped via a broadcast
     semi join against the live path set — metadata-scale work end to end.
     """
-    from moonlink_spark.table.dv import read_delete_positions
-
     table.refresh()
     dels = table.delete_entries()
     if len(dels) < min_files:
         return RewriteDeletesResult(None, len(dels), len(dels), 0, skipped=True)
-    pos = read_delete_positions(spark, dels)
-    live = local_frame(
-        spark, {"lp": [norm_path(e.path) for e in table.data_entries()]}, "lp string"
+    entries = _repack_live_positions(
+        spark, table, dels, table.data_entries(), num_files
     )
-    kept = pos.join(
-        F.broadcast(live), pos["file_path"] == live["lp"], "left_semi"
-    )
-    entries = [
-        e
-        for e in write_delete_files(
-            spark, kept, table.new_delete_dir(), num_files=num_files
-        )
-        if e.record_count > 0
-    ]
     n_in = sum(e.record_count for e in dels)
     n_out = sum(e.record_count for e in entries)
     snap = table.commit_with_retry(
@@ -322,41 +325,25 @@ def removable_delete_files(
     return {e.path for e in dels if norm_path(e.path) in srcs}
 
 
-def removable_eq_delete_files(
-    spark: SparkSession, table: Table, removed_data_paths: set[str]
-) -> set[str]:
+def removable_eq_delete_files(table: Table, removed_data_paths: set[str]) -> set[str]:
     """Equality-delete files with no remaining target — droppable in the
     same commit. An eq-delete at sequence S applies only to data files with
     sequence < S (table/scan.py rule); compaction outputs take the NEW
     commit sequence (their rows were eq-filtered during the rewrite read),
     so after removing ``removed_data_paths`` the file is dangling iff every
     SURVIVING data file has sequence >= S. Needs only the min surviving
-    sequence — one distributed agg over parquet manifests at scale."""
-    from moonlink_spark.table.format import DATA, EQ_DELETES
-    from moonlink_spark.table.planning import plannable
-
+    sequence, read from the entry list the removing commit reads anyway."""
     eqs = table.entries(content=EQ_DELETES)
     if not eqs:
         return set()
-    if plannable(table):
-        snap = table.head_snapshot()
-        df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
-        rem = local_frame(spark, {"rp": removed_data_paths}, "rp string")
-        row = (
-            df.join(F.broadcast(rem), df["path"] == rem["rp"], "left_anti")
-            .agg(F.min("sequence_number").alias("m"))
-            .collect()[0]
-        )
-        min_seq = row["m"]
-    else:
-        min_seq = min(
-            (
-                e.sequence_number
-                for e in table.data_entries()
-                if e.path not in removed_data_paths
-            ),
-            default=None,
-        )
+    min_seq = min(
+        (
+            e.sequence_number
+            for e in table.data_entries()
+            if e.path not in removed_data_paths
+        ),
+        default=None,
+    )
     return {e.path for e in eqs if min_seq is None or e.sequence_number <= min_seq}
 
 
@@ -406,8 +393,8 @@ def select_candidates(
         or unindexed(e)
         or (e.record_count and del_counts.get(norm_path(e.path), 0) / e.record_count >= delete_ratio)
     ]
-    # (size, path) is a total order — keeps the selection identical to the
-    # distributed planner (planning.plan_compaction_candidates) on ties
+    # (size, path) is a total order — ties select the same files whatever
+    # order the manifests list them in
     cand.sort(key=lambda e: (e.file_size_bytes, e.path))
     need = 2 if mode == FORCE_REGULAR else min_files
     if len(cand) < need:
@@ -466,7 +453,6 @@ def compact(
     max_files: int = 32,
     delete_ratio: float = 0.5,
     checkpoint_root: str | None = None,
-    batch_bins_threshold: int = _BATCH_BINS_THRESHOLD,
     scope_key: str | list[str] | None = None,
     scope_lo=None,
     scope_hi=None,
@@ -476,63 +462,31 @@ def compact(
     spot-maintenance shape (compact the hot key range / buckets a skewed
     ingest just fragmented, not the whole table). ``scope_key``+bounds
     prune the candidate pool by manifest min/max exactly like ``scan_range``
-    (distributed over parquet manifests at scale, so the driver holds
-    O(slice)); ``scope_buckets`` restricts to those key buckets (un-bucketed
-    files stay eligible — they are MERGE-probe debt wherever they live).
-    The selection policy (min_files, delete_ratio...) then applies WITHIN
-    the slice."""
+    (through the one candidate planner, planning.py); ``scope_buckets``
+    restricts to those key buckets (un-bucketed files stay eligible — they
+    are MERGE-probe debt wherever they live). The selection policy
+    (min_files, delete_ratio...) then applies WITHIN the slice."""
     table.refresh()
-    scoped = scope_key is not None or scope_buckets is not None
-    # candidate selection runs DISTRIBUTED over parquet manifests when the
-    # table is at that scale (planning.py — delete counts join the manifests
-    # as a DataFrame, so the driver holds O(candidates), never O(table) and
-    # never O(files-with-deletes)); JSON-manifest tables select driver-side
-    # from the dict form, same policy
-    from moonlink_spark.table.planning import (
-        plan_compaction_candidates,
-        plan_data_candidates,
-        plannable,
-    )
+    # selection runs on the driver over the snapshot's entry list: the
+    # delete-file scans below and the removing commit parse every manifest
+    # anyway, so a Spark job over the manifests would save no driver memory
+    pool = None
+    if scope_key is not None or scope_buckets is not None:
+        from moonlink_spark.table.planning import plan_data_candidates
 
-    if scoped:
         pool, _ = plan_data_candidates(
             spark, table, scope_key or [], scope_lo, scope_hi,
             batch_buckets=scope_buckets,
         )
-        del_counts = _delete_counts(spark, table)
-        selected = select_candidates(
-            table, del_counts, mode, target_bytes, min_files, max_files,
-            delete_ratio, entries=pool,
-        )
-    elif plannable(table):
-        dc_df = _delete_counts_df(spark, table)
-        if dc_df is not None:
-            dc_df = dc_df.cache()
-        try:
-            selected = plan_compaction_candidates(
-                spark, table, dc_df, mode, target_bytes, min_files, max_files,
-                delete_ratio, bucketed=bool(table_buckets(table)),
-            )
-            # bin planning + live-bytes metrics need counts ONLY for the
-            # selected files — O(selected) driver, pulled via a semi join
-            del_counts: dict[str, int] = {}
-            if selected and dc_df is not None:
-                sel = local_frame(spark, {"p": [norm_path(e.path) for e in selected]}, "p string")
-                del_counts = {
-                    r["file_path"]: r["n"]
-                    for r in dc_df.join(
-                        sel, dc_df["file_path"] == sel["p"], "left_semi"
-                    ).collect()
-                }
-        finally:
-            if dc_df is not None:
-                dc_df.unpersist()
-    else:
-        del_counts = _delete_counts(spark, table)
-        selected = select_candidates(
-            table, del_counts, mode, target_bytes, min_files, max_files,
-            delete_ratio,
-        )
+        # the planner's Spark executor returns survivors in split order, not
+        # manifest order, and full mode keeps the pool's order: sort it so
+        # either manifest form selects identically
+        pool.sort(key=lambda e: e.path)
+    del_counts = _delete_counts(spark, table)
+    selected = select_candidates(
+        table, del_counts, mode, target_bytes, min_files, max_files,
+        delete_ratio, entries=pool,
+    )
     if not selected:
         return CompactResult(None, 0, 0, 0, 0, 0, skipped=True)
 
@@ -685,7 +639,7 @@ def compact(
             ).entries
         return bucketize()
 
-    batched = len(bins) > batch_bins_threshold
+    batched = len(bins) > _BATCH_BINS_THRESHOLD
     if batched:
         # one Spark job for ALL bins — O(1) driver jobs per compaction even
         # at 100 TB bin counts; bucketize overlaps as its own job
@@ -717,7 +671,7 @@ def compact(
 
     # delete files now fully dangling → drop in the same commit
     removable_deletes = removable_delete_files(spark, table, sel_paths)
-    removable_deletes |= removable_eq_delete_files(spark, table, sel_paths)
+    removable_deletes |= removable_eq_delete_files(table, sel_paths)
 
     # per-task skew signal (north rule: lineage + metrics per task): how
     # unevenly the planned bins pack — max live-bytes bin over the mean

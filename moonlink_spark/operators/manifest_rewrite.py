@@ -9,10 +9,11 @@ after many batches the metadata itself fragments. This job:
 
 1. regroups all live entries into one data manifest + one deletes manifest
    (entries keep their original sequence numbers → scans byte-identical);
-2. optionally rewrites the positional-delete files themselves, dropping rows
-   that reference no live data file (dangling after compaction) and
-   coalescing many small delete files into few — a small Spark job over
-   metadata-scale rows.
+2. rewrites the positional-delete files themselves, dropping rows that
+   reference no live data file (dangling after compaction) and coalescing
+   many small delete files into few — the same repack as
+   ``compact.rewrite_position_deletes``, a small Spark job over
+   metadata-scale rows. A delete file left with no row is dropped.
 """
 
 from __future__ import annotations
@@ -20,12 +21,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from moonlink_spark.session import local_frame
+from moonlink_spark.operators.compact import _repack_live_positions
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import Snapshot, norm_path
-from moonlink_spark.table.writer import write_delete_files
+from moonlink_spark.table.format import Snapshot
 
 
 @dataclass
@@ -41,7 +40,6 @@ class RewriteResult:
 def rewrite_manifests(
     spark: SparkSession,
     table: Table,
-    sweep_deletes: bool = True,
     min_manifests: int = 2,
 ) -> RewriteResult:
     table.refresh()
@@ -53,23 +51,13 @@ def rewrite_manifests(
     delete_entries = table.delete_entries()
 
     new_delete_entries = delete_entries
-    if sweep_deletes and delete_entries:
-        from moonlink_spark.table.dv import read_delete_positions
-
-        live_paths = {norm_path(e.path) for e in data_entries}
-        ddf = read_delete_positions(spark, delete_entries)
-        live_df = local_frame(spark, {"file_path": live_paths}, "file_path string")
-        # no dropDuplicates needed: the DV repack (write_delete_files →
-        # pack_positions) sets each position's bit once per data file
-        swept = ddf.join(F.broadcast(live_df), "file_path", "left_semi")
-        max_seq = max(e.sequence_number for e in delete_entries)
-        new_delete_entries = write_delete_files(
-            spark,
-            swept,
-            table.new_delete_dir(),
+    if delete_entries:
+        new_delete_entries = _repack_live_positions(
+            spark, table, delete_entries, data_entries,
             num_files=max(1, len(delete_entries) // 16),
         )
         # swept delete rows must keep applying to the same (older) data files
+        max_seq = max(e.sequence_number for e in delete_entries)
         for e in new_delete_entries:
             e.sequence_number = max_seq
     elif n_manifests < min_manifests:

@@ -17,13 +17,19 @@ a filter.
 Executors, chosen by the snapshot's manifest form (not by a user switch):
 
 - parquet manifests on Spark-readable storage (``plannable``) are a dataset,
-  so pruning runs as a Spark job over them and the driver materializes only
-  the SURVIVING entries — O(survivors), never O(table), which is the only
-  shape that holds at 10^8-10^9 files. Iceberg plans scans over its Avro
-  manifests with the same metadata-as-data shape.
+  so pruning runs as a Spark job over them and only the SURVIVING entries
+  are collected. Iceberg plans scans over its Avro manifests with the same
+  metadata-as-data shape. The driver still holds O(table) entries wherever
+  its caller also reads the snapshot's delete entries or commits (each parses
+  every manifest); the O(survivors) bound holds only for this call.
 - JSON manifests are small by construction (format.py upgrades to parquet
   past 4096 entries), so the driver evaluates ``keep_entries`` over the
   parsed entries and launches no Spark job.
+
+Compaction SELECTION is not planned here: ``compact.select_candidates``
+applies moonlink's trigger policy on the driver, to the pool this module
+returns (scoped compaction) or to the snapshot's data entries, which the
+compaction commit reads anyway.
 """
 
 from __future__ import annotations
@@ -201,75 +207,3 @@ def plan_data_candidates_union(
     cells, not one per cell). Returns (survivors, total data-file count)."""
     return _plan(spark, table, {key: list(ranges)}, None, snapshot_id)
 
-
-def plan_compaction_candidates(
-    spark: SparkSession,
-    table: Table,
-    del_counts_df,
-    mode: str,
-    target_bytes: int,
-    min_files: int,
-    max_files: int,
-    delete_ratio: float,
-    bucketed: bool,
-) -> list[FileEntry] | None:
-    """Compaction candidate selection as a Spark job over the snapshot's
-    parquet manifests — the distributed twin of
-    ``operators.compact.select_candidates`` (same trigger policy, reference
-    snapshot_maintenance.rs:42-196). Returns None when not plannable.
-
-    ``del_counts_df`` — per-file deleted-row counts as a DataFrame
-    (file_path, n), or None when the snapshot has no deletes — joins the
-    manifests executor-side, so NOTHING about the delete distribution ever
-    lands whole on the driver (a broad delete wave can touch a large
-    fraction of 10^9 files). The driver receives O(candidates): best-effort
-    truncates to ``max_files`` via a distributed sort+limit; full mode
-    returns every file needing work, which is exactly the set the driver
-    must orchestrate rewrites for anyway.
-    """
-    if not plannable(table):
-        return None
-    snap = table.head_snapshot()
-    df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
-    if del_counts_df is not None:
-        dc = del_counts_df.select(
-            F.col("file_path").alias("dpath"), F.col("n").alias("dn")
-        )
-        from moonlink_spark.table.scan import _norm_path
-
-        df = df.join(dc, _norm_path(F.col("path")) == F.col("dpath"), "left").drop("dpath")
-    else:
-        df = df.withColumn("dn", F.lit(None).cast("long"))
-    dn = F.coalesce(F.col("dn"), F.lit(0))
-    small = F.col("file_size_bytes") < F.lit(int(target_bytes))
-    unindexed = F.col("bucket").isNull() if bucketed else F.lit(False)
-
-    if mode == "full":
-        rows = df.filter(small | (dn > 0) | unindexed).drop("dn").collect()
-        cand = [_row_to_entry(r) for r in rows]
-        # lone-file rule: a single bucketed candidate is a pointless concat;
-        # a lone UNBUCKETED file still gets rewritten (bucketizing it removes
-        # a permanent MERGE probe candidate)
-        if len(cand) == 1 and not (bucketed and cand[0].bucket is None):
-            return []
-        return cand
-
-    ratio_hit = (F.col("record_count") > 0) & (
-        dn / F.col("record_count") >= F.lit(delete_ratio)
-    )
-    need = 2 if mode == "force_regular" else min_files
-    # limit(max(need, max_files)): enough rows to distinguish "fewer than
-    # ``need`` candidates exist" (-> skip) from "plenty exist" (-> take the
-    # ``max_files`` smallest); ties broken by path so the order is a total
-    # one, matching the driver path exactly
-    rows = (
-        df.filter(small | unindexed | ratio_hit)
-        .orderBy("file_size_bytes", "path")
-        .limit(max(need, max_files))
-        .drop("dn")
-        .collect()
-    )
-    cand = [_row_to_entry(r) for r in rows]
-    if len(cand) < need:
-        return []
-    return cand[:max_files]

@@ -105,7 +105,7 @@ def test_rewrite_manifests_sweeps_after_compact(spark, loaded):
     before = content_hash(spark, t)
     compact(spark, t, mode=FORCE_REGULAR, max_files=3, target_bytes=1 << 30)
     assert content_hash(spark, t) == before
-    rewrite_manifests(spark, t, sweep_deletes=True)
+    rewrite_manifests(spark, t)
     assert content_hash(spark, t) == before
     # swept delete files only reference live data files now
     live = {e.path for e in t.data_entries()}
@@ -113,6 +113,84 @@ def test_rewrite_manifests_sweeps_after_compact(spark, loaded):
         dels = spark.read.parquet(*[e.path for e in t.delete_entries()])
         refs = {r["file_path"] for r in dels.select("file_path").distinct().collect()}
         assert refs <= live
+
+
+def _zero_row_dv(spark, t):
+    """Commit the delete file ``write_delete_files`` makes from no position:
+    one entry with ``record_count`` 0."""
+    from moonlink_spark.session import local_frame
+    from moonlink_spark.table.writer import write_delete_files
+
+    none = local_frame(spark, {"file_path": [], "pos": []}, "file_path string, pos long")
+    (empty,) = write_delete_files(spark, none, t.new_delete_dir())
+    assert empty.record_count == 0
+    t.commit("delete", added=[empty])
+
+
+def test_rewrite_manifests_leaves_no_zero_row_delete_file(spark, tmp_path):
+    """A DV file whose only data file was removed is swept to nothing and
+    dropped: the sweep commits no delete entry with zero rows (one that
+    ``removable_delete_files`` could never remove later)."""
+    from moonlink_spark.datagen import generate_images
+    from moonlink_spark.session import local_frame
+    from moonlink_spark.table.format import norm_path
+    from moonlink_spark.table.writer import write_data_files, write_delete_files
+
+    t = create_table(str(tmp_path / "t"), IMAGES_SCHEMA)
+    for lsn in (1, 2):
+        t.commit(
+            "append",
+            added=write_data_files(
+                spark, generate_images(spark, 50, partitions=1), t.new_data_dir(),
+                num_files=1,
+            ),
+            lsn=lsn,
+        )
+    gone, _ = t.data_entries()
+    dv = write_delete_files(
+        spark,
+        local_frame(
+            spark, {"file_path": [norm_path(gone.path)] * 3, "pos": [0, 1, 2]},
+            "file_path string, pos long",
+        ),
+        t.new_delete_dir(),
+    )
+    t.commit("delete", added=dv)
+    t.commit("overwrite", removed_paths={gone.path})
+    before = content_hash(spark, t)
+    assert before[1] == 50
+
+    res = rewrite_manifests(spark, t)
+    assert not res.skipped
+    assert [e.record_count for e in t.delete_entries()] == []
+    assert res.delete_files_after == 0
+    assert content_hash(spark, t) == before
+
+
+def test_cluster_drops_every_delete_file(spark, tmp_path):
+    """``cluster`` rewrites every data file with every delete applied, so it
+    drops every delete file of the snapshot: DVs, equality deletes and a
+    zero-row DV file alike, with the content unchanged."""
+    from moonlink_spark.table.format import EQ_DELETES
+
+    t = create_table(str(tmp_path / "t"), IMAGES_SCHEMA)
+    gen = CdcScheduleGenerator(seed=17)
+    for sizes, mode in (
+        ((200, 0, 0), "eager"), ((20, 40, 30), "eager"), ((0, 30, 20), "lazy")
+    ):
+        b = gen.next_batch(*sizes)
+        merge_cdc_batch(spark, t, to_spark(spark, b), gen.commit_lsn, mode=mode)
+    _zero_row_dv(spark, t)
+    dels = [e for e in t.entries() if e.content != "data"]
+    assert sorted((e.content, e.record_count > 0) for e in dels) == [
+        ("deletes", False), ("deletes", True), (EQ_DELETES, True)
+    ]
+    before = content_hash(spark, t)
+
+    res = cluster(spark, t, strategy="zorder", target_bytes=64 * 1024)
+    assert res.metrics["removed_delete_files"] == len(dels)
+    assert [e for e in t.entries() if e.content != "data"] == []
+    assert content_hash(spark, t) == before
 
 
 def test_expire_snapshots_gc(spark, loaded, tmp_path):
@@ -184,7 +262,7 @@ def test_expire_age_guard_protects_young_snapshots(spark, loaded):
     assert len(t.md.snapshots) == 2
 
 
-def test_compact_batched_bins_single_job(spark, tmp_path):
+def test_compact_batched_bins_single_job(spark, tmp_path, monkeypatch):
     """Bins beyond the threshold are rewritten by ONE Spark job (union of
     coalesce(1) branches + partitionBy bin id) — content identical, outputs
     bucket-pure, per-bin checkpoint lineage recorded post-hoc. This is the
@@ -193,6 +271,7 @@ def test_compact_batched_bins_single_job(spark, tmp_path):
 
     from moonlink_spark.checkpoint import JobCheckpoint
     from moonlink_spark.datagen import generate_images
+    from moonlink_spark.operators import compact as compact_mod
     from moonlink_spark.table.bloom import BLOOM_STAT
     from moonlink_spark.table.writer import BUCKETS_PROP, write_bucketed_data_files
 
@@ -209,9 +288,10 @@ def test_compact_batched_bins_single_job(spark, tmp_path):
     base_snap = t.md.current_snapshot_id
 
     ckroot = str(tmp_path / "ck")
+    monkeypatch.setattr(compact_mod, "_BATCH_BINS_THRESHOLD", 4)
     res = compact(
         spark, t, mode=FULL, target_bytes=1 << 30,  # one bin per bucket -> 8
-        checkpoint_root=ckroot, batch_bins_threshold=4,
+        checkpoint_root=ckroot,
     )
     assert not res.skipped
     assert res.metrics["bins"] > 4
@@ -229,7 +309,7 @@ def test_compact_batched_bins_single_job(spark, tmp_path):
     # a resumed run reuses every completed bin (no recompute, same outputs)
     res2 = compact(
         spark, t, mode=FULL, target_bytes=1 << 30,
-        checkpoint_root=ckroot, batch_bins_threshold=4,
+        checkpoint_root=ckroot,
     )
     assert content_hash(spark, t) == before
 

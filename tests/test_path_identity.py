@@ -21,7 +21,6 @@ from moonlink_spark.operators import compact as compact_mod
 from moonlink_spark.operators.compact import (
     FULL,
     _delete_counts,
-    _delete_counts_df,
     _live_bytes,
     compact,
     removable_delete_files,
@@ -33,7 +32,6 @@ from moonlink_spark.schema import IMAGES_SCHEMA
 from moonlink_spark.table.bloom import BLOOM_STAT
 from moonlink_spark.table.catalog import create_table
 from moonlink_spark.table.format import MANIFEST_FORMAT_PROP, norm_path
-from moonlink_spark.table.planning import plan_compaction_candidates
 from moonlink_spark.table.scan import scan
 from moonlink_spark.table.writer import BUCKETS_PROP, write_bucketed_data_files
 
@@ -116,17 +114,13 @@ def test_delete_sites_match_manifest_paths(spark, tmp_path, monkeypatch, scheme)
         scan(spark, t).select(*COLS).collect()
     )
 
-    # 3. delete counts reach compaction selection, both executors
+    # 3. delete counts reach compaction selection
     dc = _delete_counts(spark, t)
     assert sum(dc.values()) == 100
     assert sorted(e.path for e in select_candidates(
         t, dc, mode=FULL, target_bytes=1, entries=base
     )) == sorted(e.path for e in base)
     assert all(_live_bytes(e, dc) < e.file_size_bytes for e in base)
-    planned = plan_compaction_candidates(
-        spark, t, _delete_counts_df(spark, t), FULL, 1, 16, 32, 0.5, bucketed=True
-    )
-    assert {e.path for e in base} <= {e.path for e in planned}
 
     # 4. every bucketed file carries a key bloom (MERGE bloom pruning)
     assert all(BLOOM_STAT in e.stats for e in base)

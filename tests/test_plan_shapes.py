@@ -229,7 +229,7 @@ def test_delete_maintenance_runs_no_pickled_rows(spark, tmp_path):
     t, gen = _with_eq_deletes(spark, tmp_path)
     steps = [
         lambda: rewrite_position_deletes(spark, t, min_files=1),
-        lambda: rewrite_manifests(spark, t, sweep_deletes=True, min_manifests=1),
+        lambda: rewrite_manifests(spark, t, min_manifests=1),
         lambda: compact(spark, t, mode=FULL, target_bytes=1 << 30),
         lambda: _lazy_merge(spark, t, gen),
         lambda: rewrite_equality_deletes(spark, t),

@@ -1,6 +1,7 @@
 """Parquet manifests + distributed scan planning (metadata-as-data)."""
 
-import json
+import ast
+import os
 import random
 
 import pytest
@@ -26,7 +27,7 @@ from moonlink_spark.table.planning import (
     plannable,
 )
 from moonlink_spark.table.scan import scan
-from moonlink_spark.table.writer import BUCKETS_PROP, bucket_id
+from moonlink_spark.table.writer import BUCKETS_PROP
 
 
 @pytest.fixture()
@@ -135,36 +136,182 @@ def test_json_table_not_plannable_but_merge_still_works(spark, tmp_path):
     assert all(m.endswith(".json") for m in snap.manifests)
 
 
-@pytest.mark.parametrize("mode", ["best_effort", "force_regular", "full"])
-def test_plan_compaction_matches_driver_selection(spark, ptable, mode):
-    """Distributed compaction candidate selection == select_candidates for
-    every trigger mode, on a table with deletes + unbucketed files."""
-    from moonlink_spark.operators.compact import (
-        _delete_counts,
-        _delete_counts_df,
-        select_candidates,
-    )
-    from moonlink_spark.table.planning import plan_compaction_candidates
+@pytest.fixture(scope="module")
+def history(spark, tmp_path_factory):
+    """A 4-bucket table of 400 images in bucketed files of at most 25 rows,
+    then two eager MERGEs (deletion vectors, unbucketed inserts) and one
+    lazy MERGE (an equality-delete file)."""
+    from moonlink_spark.datagen import generate_images
+    from moonlink_spark.table.writer import write_bucketed_data_files
 
-    _load(spark, ptable)  # merges leave unbucketed inserts + delete files
-    del_counts = _delete_counts(spark, ptable)
-    kw = dict(
-        mode=mode,
-        target_bytes=1 << 20,
-        min_files=2,
-        max_files=3,
-        delete_ratio=0.01,
+    t = create_table(
+        str(tmp_path_factory.mktemp("history") / "src"),
+        IMAGES_SCHEMA,
+        properties={BUCKETS_PROP: "4"},
     )
-    planned = plan_compaction_candidates(
-        spark, ptable, _delete_counts_df(spark, ptable), bucketed=True, **kw
+    t.commit(
+        "append",
+        added=write_bucketed_data_files(
+            spark, generate_images(spark, 400, partitions=4), t.new_data_dir(),
+            "image_id", 4, max_records_per_file=25,
+        ),
+        lsn=1,
     )
-    assert planned is not None
-    drv = select_candidates(ptable, del_counts, **kw)
-    assert [e.path for e in planned] == [e.path for e in drv] or sorted(
-        e.path for e in planned
-    ) == sorted(e.path for e in drv)
-    if mode != "full":  # ordered paths must agree exactly after sort+limit
-        assert [e.path for e in planned] == [e.path for e in drv]
+    gen = CdcScheduleGenerator(seed=23)
+    gen.live = {i: 0 for i in range(400)}
+    gen.next_new, gen.next_lsn = 400, 2
+    for sizes, mode in (
+        ((20, 60, 40), "eager"), ((10, 30, 20), "eager"), ((0, 20, 10), "lazy")
+    ):
+        b = gen.next_batch(*sizes)
+        merge_cdc_batch(spark, t, to_spark(spark, b), gen.commit_lsn, mode=mode)
+    return t
+
+
+def _replay(src, location: str, manifest_format: str):
+    """A new table holding ``src``'s history commit for commit: the same
+    files, so the same paths and sequence numbers, in ``manifest_format``
+    manifests."""
+    t = create_table(
+        location,
+        IMAGES_SCHEMA,
+        properties={BUCKETS_PROP: "4", MANIFEST_FORMAT_PROP: manifest_format},
+    )
+    prev: dict = {}
+    for snap in src.md.snapshots:
+        cur = {e.path: e for e in src.entries(snap.snapshot_id)}
+        t.commit(
+            snap.summary["operation"],
+            added=[e for p, e in cur.items() if p not in prev],
+            removed_paths=set(prev) - set(cur),
+            lsn=snap.summary.get("lsn"),
+        )
+        prev = cur
+    return t
+
+
+_KEY_LO, _KEY_HI = "img000000000100", "img000000000250"
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        dict(mode="best_effort", min_files=4, max_files=6),
+        dict(mode="force_regular", max_files=9),
+        dict(mode="full"),
+        dict(mode="full", scope_key="image_id", scope_lo=_KEY_LO, scope_hi=_KEY_HI),
+        dict(mode="force_regular", scope_buckets={0, 2}),
+    ],
+    ids=["best_effort", "force_regular", "full", "scoped_range", "scoped_buckets"],
+)
+def test_compaction_selection_ignores_manifest_format(
+    spark, history, tmp_path, monkeypatch, kw
+):
+    """One history committed into a JSON-manifest and a parquet-manifest
+    table: ``compact()`` makes one selection call, selects the same files in
+    the same order, leaves the same content, and launches the same number of
+    Spark jobs outside the candidate planner (scoped pruning runs as a Spark
+    job over parquet manifests only)."""
+    from moonlink_spark.operators import compact as compact_mod
+    from moonlink_spark.table import planning
+
+    selections, planner_jobs = [], [0]
+    select = compact_mod.select_candidates
+
+    def recorded_select(*a, **k):
+        selections.append(select(*a, **k))
+        return selections[-1]
+
+    monkeypatch.setattr(compact_mod, "select_candidates", recorded_select)
+    plan = planning.plan_data_candidates
+
+    def counted_plan(*a, **k):
+        j0 = _jobs(spark)
+        try:
+            return plan(*a, **k)
+        finally:
+            planner_jobs[0] += _jobs(spark) - j0
+
+    monkeypatch.setattr(planning, "plan_data_candidates", counted_plan)
+
+    want = _content_hash(spark, history)
+    runs = []
+    for fmt in ("json", "parquet"):
+        t = _replay(history, str(tmp_path / fmt), fmt)
+        assert plannable(t) == (fmt == "parquet")
+        assert [(e.path, e.sequence_number) for e in t.entries()] == [
+            (e.path, e.sequence_number) for e in history.entries()
+        ]
+        del selections[:]
+        planner_jobs[0] = 0
+        j0 = _jobs(spark)
+        res = compact_mod.compact(spark, t, target_bytes=1 << 30, **kw)
+        jobs = _jobs(spark) - j0 - planner_jobs[0]
+        assert not res.skipped
+        assert _content_hash(spark, t) == want
+        runs.append(dict(
+            jobs=jobs,
+            selections=[[e.path for e in sel] for sel in selections],
+            removed_delete_files=res.removed_delete_files,
+        ))
+    (js, pq) = runs
+    assert js["jobs"] == pq["jobs"]
+    assert len(js["selections"]) == 1
+    assert js == pq
+
+
+def _jobs(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def _content_hash(spark, table):
+    h = F.xxhash64(*IMAGES_SCHEMA.fieldNames()).cast("decimal(38,0)")
+    return tuple(scan(spark, table).agg(F.sum(h), F.count("*")).first())
+
+
+# manifests are read as a Spark dataset only by the candidate planner and by
+# the ``inspect`` metadata tables
+_MANIFEST_READERS = {
+    os.path.join("table", "planning.py"),
+    os.path.join("table", "inspect.py"),
+}
+
+
+def test_manifests_read_by_spark_only_in_planner_and_inspect():
+    """Static guard: outside ``table/planning.py`` and ``table/inspect.py``
+    no function both calls ``<session>.read[...].parquet(...)`` and touches
+    a snapshot's ``manifests``. Compaction selects on the driver, over the
+    entry list its commit reads anyway."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "moonlink_spark"
+    )
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, pkg)
+            if rel in _MANIFEST_READERS:
+                continue
+            for fn in ast.walk(ast.parse(open(path).read())):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                nodes = list(ast.walk(fn))
+                reads = any(
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "parquet"
+                    and "read" in ast.unparse(n.func.value)
+                    for n in nodes
+                )
+                touches = any(
+                    isinstance(n, ast.Attribute) and n.attr == "manifests"
+                    for n in nodes
+                )
+                if reads and touches:
+                    offenders.append(f"{rel}:{fn.lineno} {fn.name}")
+    assert not offenders, offenders
 
 
 def test_scan_range_distributed_and_driver_agree(spark, ptable, tmp_path):
