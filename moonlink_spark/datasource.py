@@ -28,7 +28,9 @@ Design:
   executor-side because the Python DataSource API produces rows in Python;
   it shares scan's identity guard (``check_eq_identity``) and the one
   data-file path rule (``table.format.norm_path``) that matches delete
-  files to data files.
+  files to data files. It does not use scan's per-session delete-side
+  read state (table/scan.py): it builds no Spark delete relation to reuse,
+  only per-partition pyarrow reads inside executor tasks.
 - **Streaming is the changelog.** ``readStream`` consumes LSN offsets:
   each micro-batch replays ``(start, end]`` commits as insert events (rows
   of files added by data-changing commits) and delete events (DV

@@ -119,21 +119,17 @@ def _repack_live_positions(
     """Re-pack the positions of ``dels`` into ``num_files`` new DV files,
     keeping only positions whose data file is in ``data``, the snapshot's
     live data entries (a broadcast semi join on the normalized path).
-    Overlapping positions fold into one bitmap bit. Outputs with no position
-    left are not returned: a zero-row delete file would never be dropped
-    again. The caller sets the outputs' sequence rule and commits them."""
+    Overlapping positions fold into one bitmap bit; an output with no
+    position left is not written (``write_delete_files``). The caller sets
+    the outputs' sequence rule and commits them."""
     from moonlink_spark.table.dv import read_delete_positions
 
     pos = read_delete_positions(spark, dels)
     live = local_frame(spark, {"lp": [norm_path(e.path) for e in data]}, "lp string")
     kept = pos.join(F.broadcast(live), pos["file_path"] == live["lp"], "left_semi")
-    return [
-        e
-        for e in write_delete_files(
-            spark, kept, table.new_delete_dir(), num_files=num_files
-        )
-        if e.record_count > 0
-    ]
+    return write_delete_files(
+        spark, kept, table.new_delete_dir(), num_files=num_files
+    )
 
 
 @dataclass
@@ -243,13 +239,9 @@ def rewrite_equality_deletes(
     matched = rows.join(eq, eq_match_cond(rows, keys), "inner").select(
         F.col(FILE_COL).alias("file_path"), F.col(POS_COL).alias("pos")
     )
-    entries = [
-        e
-        for e in write_delete_files(
-            spark, matched, table.new_delete_dir(), num_files=num_files
-        )
-        if e.record_count > 0
-    ]
+    entries = write_delete_files(
+        spark, matched, table.new_delete_dir(), num_files=num_files
+    )
     n_keys = sum(e.record_count for e in eqs)
     n_pos = sum(e.record_count for e in entries)
     snap = table.commit_with_retry(
@@ -478,10 +470,6 @@ def compact(
             spark, table, scope_key or [], scope_lo, scope_hi,
             batch_buckets=scope_buckets,
         )
-        # the planner's Spark executor returns survivors in split order, not
-        # manifest order, and full mode keeps the pool's order: sort it so
-        # either manifest form selects identically
-        pool.sort(key=lambda e: e.path)
     del_counts = _delete_counts(spark, table)
     selected = select_candidates(
         table, del_counts, mode, target_bytes, min_files, max_files,

@@ -379,10 +379,9 @@ def merge_cdc_batch(
         # write_delete_files) is the only shuffle, and the packed rows
         # (one per data file) land in few output files
         n_files = max(1, n_cdc // 10_000_000)
-        entries = write_delete_files(
+        return write_delete_files(
             spark, matched, table.new_delete_dir(), num_files=n_files
         )
-        return [e for e in entries if e.record_count > 0]
 
     src = [e.path for e in candidates]
     t0 = time.perf_counter()

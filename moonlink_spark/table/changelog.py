@@ -40,7 +40,7 @@ from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
 from moonlink_spark.table.dv import read_delete_positions
 from moonlink_spark.table.format import DATA, DELETES, EQ_DELETES, Snapshot, norm_path
-from moonlink_spark.table.scan import FILE_COL, POS_COL, scan
+from moonlink_spark.table.scan import _BROADCAST_DELETE_ROWS, FILE_COL, POS_COL, scan
 
 CHANGE_TYPE_COL = "_change_type"
 CHANGE_LSN_COL = "_change_lsn"
@@ -63,9 +63,6 @@ MIN_CHANGELOG_LSN_PROP = "moonlink.min-changelog-lsn"
 _REPLACE_OP_PREFIXES = ("compact", "cluster", "rewrite-", "rollback")
 # schema-only commits: no row events
 _SCHEMA_OP_PREFIXES = ("add-columns", "drop-columns")
-
-# same broadcast ceiling rationale as table/scan.py: ~300B per (path,pos) row
-_BROADCAST_DELETE_ROWS = 1_000_000
 
 
 def _is_replace(op: str) -> bool:

@@ -18,10 +18,13 @@ Executors, chosen by the snapshot's manifest form (not by a user switch):
 
 - parquet manifests on Spark-readable storage (``plannable``) are a dataset,
   so pruning runs as a Spark job over them and only the SURVIVING entries
-  are collected. Iceberg plans scans over its Avro manifests with the same
-  metadata-as-data shape. The driver still holds O(table) entries wherever
-  its caller also reads the snapshot's delete entries or commits (each parses
-  every manifest); the O(survivors) bound holds only for this call.
+  are collected, then sorted on the driver into manifest order (manifest,
+  then row): the order the JSON executor returns, so no caller sees a
+  candidate order that depends on the manifest form. Iceberg plans scans
+  over its Avro manifests with the same metadata-as-data shape. The driver
+  still holds O(table) entries wherever its caller also reads the
+  snapshot's delete entries or commits (each parses every manifest); the
+  O(survivors) bound holds only for this call.
 - JSON manifests are small by construction (format.py upgrades to parquet
   past 4096 entries), so the driver evaluates ``keep_entries`` over the
   parsed entries and launches no Spark job.
@@ -35,12 +38,13 @@ compaction commit reads anyway.
 from __future__ import annotations
 
 import json
+from urllib.parse import unquote
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark.table.catalog import Table
-from moonlink_spark.table.format import DATA, FileEntry
+from moonlink_spark.table.format import DATA, FileEntry, norm_path
 
 
 def _spark_readable(path: str) -> bool:
@@ -148,7 +152,12 @@ def _plan(
         entries = table.data_entries(snapshot_id)
         return keep_entries(entries, intervals, buckets), len(entries)
     snap = table.head_snapshot(snapshot_id)
-    df = spark.read.parquet(*snap.manifests).filter(F.col("content") == DATA)
+    df = (
+        spark.read.parquet(*snap.manifests)
+        .withColumn("__manifest", F.col("_metadata.file_path"))
+        .withColumn("__row", F.col("_metadata.row_index"))
+        .filter(F.col("content") == DATA)
+    )
     keep = F.lit(True)
     if buckets is not None:
         keep = F.col("bucket").isNull() | F.col("bucket").isin(
@@ -165,6 +174,15 @@ def _plan(
         hits = df.filter(keep).collect()
     finally:
         df.unpersist()
+    # Spark returns rows in split order (files packed by size); manifest
+    # order is the JSON executor's. ``_metadata.file_path`` is URI-encoded
+    position = {norm_path(m): i for i, m in enumerate(snap.manifests)}
+
+    def manifest_order(r):
+        m = position.get(norm_path(unquote(r["__manifest"])), len(position))
+        return m, r["__manifest"], r["__row"]
+
+    hits.sort(key=manifest_order)
     return [_row_to_entry(r) for r in hits], total
 
 

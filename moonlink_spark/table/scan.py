@@ -28,6 +28,23 @@ call it. A row is ``(__file, __pos)``, ``__file`` normalized by the one path
 rule (table/format.norm_path, Column form ``_norm_path``), so delete files
 match their data files at plain and ``file://`` locations alike.
 
+Delete-side read state. The reference keeps one read state per snapshot
+version and hands every reader the same prepared delete set
+(read_state_manager.rs:90-164); Iceberg's ``DeleteFileIndex`` plays the same
+role. Here each session keeps a bounded LRU of the delete-side relations
+:func:`read_files` builds: one DV frame per DV file list
+(:func:`delete_positions`) and one equality-delete relation per sequence
+group (:func:`eq_delete_frame`). A key is the identity of the files —
+``(path, file_size_bytes, record_count, sequence_number)`` each, plus the
+key-column schema for an equality group — and file names carry uuids and
+files are never modified, so the LRU bound is the only invalidation needed.
+After a lazy MERGE the next read builds only the new file's group. The cache
+holds plans, not rows: files are read when the query runs (a corrupt DV
+still fails loudly), and the broadcast hint is applied per read, outside the
+cached relation. The cache belongs to the ``SparkSession`` object (a frame
+of one session cannot join another's) and a lock guards it: MERGE and
+compaction read from driver threads.
+
 File pruning: per-file min/max bounds from manifests prune data files before
 the scan starts (the moonlink GlobalIndex's job — locate keys without reading
 everything — done the Spark way, reference:
@@ -37,12 +54,16 @@ candidate planner lives in table/planning.py.
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from moonlink_spark.session import local_frame
 from moonlink_spark.table.catalog import Table
+from moonlink_spark.table.dv import DV_FORMAT_STAT, read_delete_positions
 from moonlink_spark.table.format import EQ_DELETES, FILE_SCHEME_RE, FileEntry
 from moonlink_spark.table.writer import EQ_KEYS_STAT
 
@@ -57,10 +78,54 @@ _DSEQ_COL = "__dseq"
 # delete ratios low so this path is rare.
 _BROADCAST_DELETE_ROWS = 1_000_000
 
+# delete-side relations a session keeps (module docstring); a read of a
+# merge-on-read table holds one DV frame and one relation per live
+# equality-delete sequence group
+_READ_STATE_MAX = 128
+_READ_STATE_ATTR = "_moonlink_read_state"
+_read_state_lock = threading.Lock()
+
 
 def _norm_path(col: Column) -> Column:
     """Column form of table/format.norm_path."""
     return F.regexp_replace(col, FILE_SCHEME_RE, "/")
+
+
+def _file_ids(entries: list[FileEntry]) -> tuple:
+    """The identity of a delete-file set, in any order (a read-state key)."""
+    return tuple(sorted(
+        (e.path, e.file_size_bytes, e.record_count, e.sequence_number,
+         e.stats.get(DV_FORMAT_STAT))
+        for e in entries
+    ))
+
+
+def _read_state(spark: SparkSession, key: tuple, build) -> DataFrame:
+    """The session's delete-side relation for ``key``; ``build()`` makes it
+    on a miss. Two threads missing at once both build; either result is the
+    same plan."""
+    with _read_state_lock:
+        cache = spark.__dict__.setdefault(_READ_STATE_ATTR, OrderedDict())
+        df = cache.get(key)
+        if df is not None:
+            cache.move_to_end(key)
+            return df
+    df = build()
+    with _read_state_lock:
+        cache[key] = df
+        cache.move_to_end(key)
+        while len(cache) > _READ_STATE_MAX:
+            cache.popitem(last=False)
+    return df
+
+
+def delete_positions(spark: SparkSession, entries: list[FileEntry]) -> DataFrame:
+    """``dv.read_delete_positions`` of ``entries`` (non-empty), one relation
+    per DV file list per session."""
+    return _read_state(
+        spark, ("dv", _file_ids(entries)),
+        lambda: read_delete_positions(spark, entries),
+    )
 
 
 def scan(
@@ -184,12 +249,10 @@ def read_files(
         df = _read(schema, data)
 
     if pos_deletes:
-        from moonlink_spark.table.dv import read_delete_positions
-
         n_del = sum(e.record_count for e in pos_deletes)
         # DV bitmaps expand to (file,pos) rows lazily, executor-side, and
         # only feed this anti-join — delete metadata is tiny vs row data
-        dels = read_delete_positions(spark, pos_deletes)
+        dels = delete_positions(spark, pos_deletes)
         cond = (df[FILE_COL] == _norm_path(dels["file_path"])) & (df[POS_COL] == dels["pos"])
         if n_del <= _BROADCAST_DELETE_ROWS:
             dels = F.broadcast(dels)
@@ -230,7 +293,8 @@ def eq_delete_frame(
 ) -> DataFrame:
     """Equality-delete keys of ``entries`` (all written over ``keys``) as one
     DataFrame with columns ``__eq_<key>...`` and ``__eseq`` (the delete
-    file's sequence number), broadcast below the usual ceiling."""
+    file's sequence number), broadcast below the usual ceiling. Each
+    sequence group's relation is kept in the session's read state."""
     from moonlink_spark.table.fieldids import strip_field_ids
 
     # eq files grouped by THEIR sequence number (few distinct commits alive
@@ -242,18 +306,27 @@ def eq_delete_frame(
     key_schema = strip_field_ids(
         StructType([f for f in schema.fields if f.name in keys])
     )
-    parts = []
-    for s, group in sorted(by_seq.items()):
-        parts.append(
+
+    def build(s: int, group: list[FileEntry]) -> DataFrame:
+        return (
             spark.read.schema(key_schema)
             .parquet(*[e.path for e in group])
-            .select(*keys)
-            .withColumn("__eseq", F.lit(int(s)))
+            .select(
+                *[F.col(k).alias(f"__eq_{k}") for k in keys],
+                F.lit(int(s)).alias("__eseq"),
+            )
         )
+
+    parts = [
+        _read_state(
+            spark, ("eq", key_schema.json(), tuple(keys), _file_ids(group)),
+            lambda s=s, group=group: build(s, group),
+        )
+        for s, group in sorted(by_seq.items())
+    ]
     eq = parts[0]
     for p in parts[1:]:
         eq = eq.unionByName(p)
-    eq = eq.select(*[F.col(k).alias(f"__eq_{k}") for k in keys], "__eseq")
     if sum(e.record_count for e in entries) <= _BROADCAST_DELETE_ROWS:
         eq = F.broadcast(eq)
     return eq

@@ -184,6 +184,17 @@ def write_data_files(
     )
 
 
+def _drop_empty(out_dir: str, entries: list[FileEntry]) -> list[FileEntry]:
+    """``entries`` minus the zero-row files, which are deleted: Spark writes
+    a schema-only file for an empty input, and a delete file that deletes
+    nothing would only sit in ``deletes/`` until an orphan sweep."""
+    acc = accessor_for(out_dir)
+    for e in entries:
+        if e.record_count == 0:
+            acc.delete(e.path)
+    return [e for e in entries if e.record_count > 0]
+
+
 def write_delete_files(
     spark: SparkSession,
     deletes_df: DataFrame,
@@ -201,7 +212,8 @@ def write_delete_files(
     merge metrics keep their v1 semantics. Cardinalities come from a
     driver-side pyarrow read of just the ``card`` column — delete files are
     metadata-scale (one row per referenced data file), so this replaces what
-    used to be a whole extra Spark job on the MERGE hot path."""
+    used to be a whole extra Spark job on the MERGE hot path. A file left
+    with no position is deleted, not returned."""
     from moonlink_spark.table.dv import DV2C, DV_FORMAT_STAT, pack_positions
 
     packed = pack_positions(deletes_df, num_files or None)
@@ -214,7 +226,7 @@ def write_delete_files(
         col = pf.read(columns=["card"]).column("card")
         e.record_count = int(sum(col.to_pylist())) if len(col) else 0
         e.stats[DV_FORMAT_STAT] = DV2C
-    return entries
+    return _drop_empty(out_dir, entries)
 
 
 # the identity-key column list an eq-delete file was written over, recorded
@@ -235,7 +247,8 @@ def write_eq_delete_files(
     STRICTLY LOWER sequence number (format.py EQ_DELETES) — the lazy half
     of moonlink's delete-by-key buffering (mooncake_table.rs:1160-1184):
     the write is O(batch keys) with NO probe read; the key lookup happens
-    at scan / compaction instead."""
+    at scan / compaction instead. A file with no key is deleted, not
+    returned."""
     df = keys_df.select(*keys)
     if num_files:
         df = df.repartition(num_files)
@@ -243,4 +256,4 @@ def write_eq_delete_files(
     entries = collect_file_entries(spark, list_parquet(out_dir), content=EQ_DELETES)
     for e in entries:
         e.stats[EQ_KEYS_STAT] = ",".join(keys)
-    return [e for e in entries if e.record_count > 0]
+    return _drop_empty(out_dir, entries)

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,16 +117,64 @@ def test_rewrite_manifests_sweeps_after_compact(spark, loaded):
         assert refs <= live
 
 
+def _delete_files(t):
+    """Every parquet file under the table's ``deletes/`` directory."""
+    from moonlink_spark.table.writer import list_parquet
+
+    return list_parquet(os.path.join(t.data_root, "deletes"))
+
+
 def _zero_row_dv(spark, t):
-    """Commit the delete file ``write_delete_files`` makes from no position:
-    one entry with ``record_count`` 0."""
+    """Commit a zero-row DV file, the kind earlier writers left for an empty
+    input. ``write_delete_files`` itself now writes no file from no
+    position, so the legacy file is written by hand."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from moonlink_spark.session import local_frame
+    from moonlink_spark.table.dv import DV2C, DV2_SCHEMA, DV_FORMAT_STAT
+    from moonlink_spark.table.format import DELETES, FileEntry
     from moonlink_spark.table.writer import write_delete_files
 
     none = local_frame(spark, {"file_path": [], "pos": []}, "file_path string, pos long")
-    (empty,) = write_delete_files(spark, none, t.new_delete_dir())
-    assert empty.record_count == 0
-    t.commit("delete", added=[empty])
+    before = _delete_files(t)
+    out = t.new_delete_dir()
+    assert write_delete_files(spark, none, out) == []
+    assert _delete_files(t) == before
+    legacy = os.path.join(out, "legacy-empty.parquet")
+    pq.write_table(
+        pa.Table.from_pylist([], schema=pa.schema([
+            ("file_path", pa.string()), ("card", pa.int64()), ("bitmap", pa.binary()),
+        ])),
+        legacy,
+    )
+    assert DV2_SCHEMA.startswith("file_path string, card long")
+    t.commit("delete", added=[FileEntry(
+        DELETES, legacy, 0, os.path.getsize(legacy), 0, {DV_FORMAT_STAT: DV2C}
+    )])
+
+
+def test_empty_delete_writes_leave_no_file(spark, tmp_path):
+    """A delete write with nothing to delete leaves no file in ``deletes/``:
+    an eager MERGE whose updates and deletes match no row, and an
+    equality-delete write from no key."""
+    from moonlink_spark.table.writer import write_eq_delete_files
+
+    t = create_table(str(tmp_path / "t"), IMAGES_SCHEMA)
+    gen = CdcScheduleGenerator(seed=23)
+    merge_cdc_batch(spark, t, to_spark(spark, gen.next_batch(100, 0, 0)), gen.commit_lsn)
+    b = gen.next_batch(0, 20, 10)
+    rows = to_spark(spark, b)
+    # ids no row carries, inside the files' key bounds: the probe reads
+    # candidate files and matches nothing
+    ghost = rows.withColumn("image_id", F.concat("image_id", F.lit("-ghost")))
+    before = _delete_files(t)
+    merge_cdc_batch(spark, t, ghost, gen.commit_lsn)
+    assert [e for e in t.entries() if e.content != "data"] == []
+    assert _delete_files(t) == before
+    keys = rows.select("image_id").limit(0)
+    assert write_eq_delete_files(spark, keys, t.new_delete_dir(), ["image_id"]) == []
+    assert _delete_files(t) == before
 
 
 def test_rewrite_manifests_leaves_no_zero_row_delete_file(spark, tmp_path):

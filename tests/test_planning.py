@@ -260,6 +260,42 @@ def test_compaction_selection_ignores_manifest_format(
     assert js == pq
 
 
+def test_candidate_order_ignores_manifest_format(spark, history, tmp_path, monkeypatch):
+    """The same files in JSON and in parquet manifests give the same
+    candidates in the same order, manifest order: from both planners and
+    into the reads ``scan_values`` and ``scan_range`` build."""
+    from moonlink_spark.table import scan as scan_mod
+    from moonlink_spark.table.planning import plan_data_candidates_union
+    from moonlink_spark.table.scan import _value_runs, scan_range, scan_values
+
+    read = scan_mod.read_files
+    reads: list[list[str]] = []
+
+    def recorded(spark, schema, identity, data, *a, **k):
+        reads.append([e.path for e in data])
+        return read(spark, schema, identity, data, *a, **k)
+
+    monkeypatch.setattr(scan_mod, "read_files", recorded)
+    values = [f"img{i:012d}" for i in range(90, 400, 7)]
+    runs = {}
+    for fmt in ("json", "parquet"):
+        t = _replay(history, str(tmp_path / fmt), fmt)
+        assert plannable(t) == (fmt == "parquet")
+        del reads[:]
+        ranged, total = plan_data_candidates(
+            spark, t, "image_id", _KEY_LO, _KEY_HI, batch_buckets={0, 1, 3}
+        )
+        union, _ = plan_data_candidates_union(spark, t, "image_id", _value_runs(values))
+        scan_values(spark, t, "image_id", values)
+        scan_range(spark, t, "image_id", _KEY_LO, _KEY_HI)
+        runs[fmt] = [[e.path for e in ranged], [e.path for e in union], *reads]
+        order = [e.path for e in t.data_entries()]
+        for paths in runs[fmt]:
+            assert 1 < len(paths) < total
+            assert paths == sorted(paths, key=order.index)
+    assert runs["json"] == runs["parquet"]
+
+
 def _jobs(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
 
